@@ -148,11 +148,11 @@ def _changed_since_cert(last: dict[str, int]) -> dict[str, int]:
                 untracked.add(line[3:].strip().strip('"'))
         mod_rel = {
             name: str(
-                Path(inspect.getfile(eng.QUERIES[name])).resolve().relative_to(
+                Path(inspect.getfile(inspect.unwrap(fn))).resolve().relative_to(
                     _REPO
                 )
             )
-            for name in eng.QUERIES
+            for name, fn in eng.QUERIES.items()
         }
         spans: dict[str, tuple[int, int] | None] = {}
         for name, fn in eng.QUERIES.items():

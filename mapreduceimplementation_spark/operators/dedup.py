@@ -44,7 +44,7 @@ from mapreduceimplementation_spark.functions.text import (
 )
 from mapreduceimplementation_spark.functions.stable import round6, sql_round6
 from mapreduceimplementation_spark.registry import BASELINE_CLASS, register
-from mapreduceimplementation_spark.session import spread, tune
+from mapreduceimplementation_spark.session import spread
 from mapreduceimplementation_spark.sources.tables import load_table
 
 _SHINGLE_N = 3  # word 3-gram shingles for all near-dup operators
@@ -77,7 +77,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, hash), not the text itself.  canonical_id = min doc_id of the
     group is the survivor; is_dup marks rows a pipeline would drop.
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "[ \\t\\n]+", " ")
     hashed = docs.where(F.col("text").isNotNull()).select(
@@ -282,7 +281,6 @@ def dedup_ngram_jaccard(
     BASELINE_CLASS registry tag points at (bench/scale warn when the
     unsampled form runs; a recall audit only needs the sampled truth).
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if sample_mod:
         docs = docs.where(
@@ -393,6 +391,8 @@ def _mh_perm_minima_batches(it):
     mask = np.int64(_MH_MASK30)
     names = ["doc_id"] + [f"m{i}" for i in range(_MH_K)]
     for batch in it:
+        if batch.num_rows == 0:
+            continue  # Spark can hand a kernel empty batches
         col = batch.column(1)
         flat = np.asarray(col.flatten(), dtype=np.int64)
         lens = np.asarray(col.value_lengths(), dtype=np.int64)
@@ -492,7 +492,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     never collide) and the exact
     Jaccard re-verify restricted to candidates.  Never O(n²).
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     cand = _minhash_candidates(docs, spark)
     # verify only candidate documents: the broadcast id semi-join reaches
@@ -556,7 +555,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     finds every such pair exactly (no probabilistic miss) while random pairs
     (expected hamming ~30) collide with p ~ 4 * 2^-15.
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     powers = F.array(*[F.lit(1 << b).cast("long") for b in range(_SH_BITS)])
     votes = F.aggregate(
@@ -664,7 +662,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline a 1000-executor CC job needs.  Oracle: DuckDB recursive
     CTE computes the exact transitive closure independently.
     """
-    tune(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
     edges = pairs.selectExpr("a_id AS s", "b_id AS d").unionAll(
         pairs.selectExpr("b_id AS s", "a_id AS d")
@@ -767,7 +764,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     inative — they only ever ADD candidate pairs below any containment
     floor for bounded doc sizes) exactly as the C6 docstring prescribes;
     the exact measure then verifies only candidate pairs."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return containment_pairs(docs, spark)
 
@@ -850,7 +846,6 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact while pid < 2^20 (a 20M-word doc), the knn_triangles packing
     discipline.  Reassembly identity (nothing dropped ⇒ cleaned_text ==
     text) is pytest-pinned."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     paras = docs.select(
         "doc_id",
@@ -953,7 +948,6 @@ def boilerplate_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no second fact-sized shuffle; the final rollup exchanges pair
     keys (≤ sources² rows).  The oracle states the literal self-join —
     the green hash certifies the in-bucket rewrite."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     cs = (
         docs.where(F.col("text").isNotNull())
@@ -1055,7 +1049,6 @@ def minhash_recall_audit(
     the slice (signatures and pair overlaps are pair-local, so the
     sampled audit equals the full audit restricted to sampled pairs —
     pytest-pinned)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if sample_mod:
         docs = docs.where(
@@ -1154,7 +1147,6 @@ def dedup_prefix_filter(
     docs (prefix membership is df-rank-relative but pair qualification
     is pair-local and the oracle-verified completeness theorem holds on
     any corpus, pytest-pinned)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if sample_mod:
         docs = docs.where(
@@ -1279,7 +1271,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: the gram->docs inversion is indexer.go:1-38's
     map shape (src/mrapps/indexer.go), with positions carried through.
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = spread(
         docs.where(F.col("text").isNotNull()).select(
@@ -1392,7 +1383,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands are broadcast (batch-sized); verification joins only the
     candidates' shingle sets (C7's _verified_pairs, candidate-
     restricted).  The corpus text is scanned once."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     shd = _shingled(docs, spark).localCheckpoint()
     bands = _mh_bands(shd).localCheckpoint()
@@ -1497,7 +1487,6 @@ def dedup_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     group_size rows (bounded by the duplication multiplicity, not the
     corpus).  At 100 TB this is C1's exact shape plus a 4-byte rank
     column."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text"
     )
@@ -1594,7 +1583,6 @@ def minhash_bbit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-J side is df-bounded posting intersection restricted to
     candidates.  At 100 TB the b-bit table is the one you can afford to
     keep resident — 6 bytes per doc vs 183."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     shd = _shingled(docs, spark).localCheckpoint()
     sigs = _mh_sigs(shd).localCheckpoint(eager=True)

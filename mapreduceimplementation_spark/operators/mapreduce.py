@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 MapFn = Callable[[str, str], Iterable[tuple[str, str]]]
@@ -179,6 +178,5 @@ def mr_generic_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count executed through the generic Arrow-batched engine — gates
     that the user-pluggable path produces byte-identical output to the
     native plan (reference's test-mr.sh wc golden-file check)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return map_reduce(docs, wc_map, wc_reduce, key_col="doc_id", value_col="text")

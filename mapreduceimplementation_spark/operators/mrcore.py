@@ -15,7 +15,6 @@ from pyspark.sql.window import Window
 
 from mapreduceimplementation_spark.functions.text import WORD_SEP_RE, word_tokens
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 from mapreduceimplementation_spark.sources.text import (
     materialize_text_corpus,
@@ -46,7 +45,6 @@ def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count — parity with reference src/mrapps/wc.go (Map: split on
     non-letters emit (w,1); Reduce: count).  Map-side combine comes from
     Catalyst partial aggregation; one shuffle on word."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return (
         word_tokens(docs)
@@ -71,7 +69,6 @@ def mr_wordcount_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from documents.parquet once as a test fixture (sources/text.py).  The
     oracle is the SAME SQL as mr_wordcount — files and parquet must agree
     word-for-word, the reference's golden-output check."""
-    tune(spark)
     corpus = materialize_text_corpus(sf_dir)
     docs = read_text_dir(spark, corpus + "/*.txt")
     return word_tokens(docs).groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
@@ -96,7 +93,6 @@ def mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregate, so a separate .distinct() shuffle before the
     groupBy would be pure waste — the posting list is built and deduped
     in the same aggregation that counts it."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return (
         word_tokens(docs)
@@ -125,7 +121,6 @@ def mr_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
     with true match counts.  The registered query fixes the pattern for
     the oracle; the reference's grep is parameterized, so the real API is
     ``grep(df, pattern)`` below — this entry is grep(documents, 'spark')."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return grep(docs, "spark")
 
@@ -155,7 +150,6 @@ def mr_file_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-input-file record counts — parity with reference
     src/mrapps/early_exit.go (Map: (file,1); Reduce: count), widened to
     word counts + char length per document."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     return (
         word_tokens(docs)
@@ -280,7 +274,6 @@ def mr_distributed_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
        window and the broadcast join back are O(#partitions), not O(rows).
     This is zipWithIndex's two-pass algorithm expressed in DataFrame ops
     (zipWithIndex likewise materializes: it runs a counting job first)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     order = [F.col("n_chars").desc(), F.col("doc_id").asc()]
     return distributed_rank(docs, order).select("rank", "doc_id", "n_chars")

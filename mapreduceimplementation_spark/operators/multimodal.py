@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 #: container magic numbers a real decoder would claim (stub refuses them
@@ -166,7 +165,6 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (payload = '<kind>:' || text as UTF-8 bytes, kind cycling by doc_id) so
     the decode is exactly reproducible by the SQL oracle — the honest way
     to test multimodal *plumbing* without codec libraries."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     kind = (
         F.when(F.col("doc_id") % 3 == 0, "image")
@@ -267,7 +265,6 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: payload bytes cross to Python once, Arrow-batched; output is a
     narrow typed frame; batch memory bounded by
     spark.sql.execution.arrow.maxRecordsPerBatch."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     media = docs.where(F.col("text").isNotNull() & (F.col("doc_id") % 3 == 2)).select(
         "doc_id",
@@ -326,7 +323,6 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kind, fingerprint) key.  At 100 TB: payload bytes never shuffle
     (only doc_id + 8-byte fingerprint move), decode parallelism is
     scan-partition-wide, and bucket sizes are fingerprint-uniform."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     kind = (
         F.when(F.col("doc_id") % 3 == 0, "image")

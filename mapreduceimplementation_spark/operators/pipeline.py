@@ -43,7 +43,7 @@ from mapreduceimplementation_spark.functions.stable import (
     sql_round6,
 )
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import spread, tune
+from mapreduceimplementation_spark.session import spread
 from mapreduceimplementation_spark.sources.tables import load_table
 
 _MIN_SCORE = 0.45  # keeps ~half the synthetic corpus (median score ≈ 0.44)
@@ -95,7 +95,6 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output columns: doc_id (survivor), text_hash, n_bpe_tokens, score,
     group_size (how many kept duplicates this survivor represents).
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "[ \\t\\n]+", " ")
     base = docs.where(F.col("text").isNotNull()).select(
@@ -195,7 +194,6 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row-local projection, zero shuffle, zero state; at 100 TB this is a
     scan-speed stamp that composes with partitioned writes
     (sources/sinks.py write_partitioned by split)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     bucket = hash64(
         F.concat(F.lit("split-"), F.col("doc_id").cast("string"))
@@ -248,7 +246,6 @@ def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Row-local scan-speed filter, zero shuffle; languages outside the rate
     table (or NULL) fall to rate 0 and are dropped."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     bucket = hash64(F.concat(F.lit("sample-"), F.col("doc_id").cast("string"))) % 100
     rate = None
@@ -301,7 +298,6 @@ def source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ≤|sources| rows in one task, and the weight is rounded at the
     final projection — engine-stable (sqrt is correctly-rounded IEEE in
     both engines)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     per = (
         docs.where(F.col("text").isNotNull())
@@ -377,7 +373,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mapreduceimplementation_spark.session import spread
 
-    tune(spark)
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     )
@@ -477,7 +472,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     headroom past the 100 TB target; a 1e6-width namespace would collide
     ~400x below it), exactly how a 1000-executor packing job would shard
     its output files."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     h = hash64(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
     toks = docs.where(F.col("text").isNotNull()).select(
@@ -568,7 +562,6 @@ def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is true-hits + fp-rate, not corpus-sized — filter cheap,
     join the survivors.  Size m with blocklist growth: fp ≈
     (1 - e^(-kn/m))^k; keep kn/m <= ~0.5 for sub-1% fp."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     split_bucket = hash64(
         F.concat(F.lit("split-"), F.col("doc_id").cast("string"))
@@ -660,7 +653,6 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the per-doc chunk array; ZERO shuffles, no state.  At 100 TB this
     is a scan-speed map whose output feeds the embedding UDF stage and
     partitions naturally by input split."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.where(F.col("text").isNotNull()).select(
         "doc_id", word_array("text").alias("w")
@@ -724,7 +716,6 @@ def sample_uniform_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition reach the single merge, so there is NO global sort and no
     full-corpus shuffle (the classic MapReduce top-k combiner).  The
     text column is not touched, only the id/stat projection."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -784,7 +775,6 @@ def corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (C42's per-partition top-k heaps, k rows per
     partition to the driver merge — no global sort, no shuffle); the
     final position window runs over the k-row result only."""
-    tune(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", "n_chars")
@@ -901,7 +891,6 @@ def dsir_importance(
 
     ``checkpoint=False`` (tests only) skips the lineage-truncating
     localCheckpoints so plan gates can see the full scoring stage."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
@@ -1199,8 +1188,10 @@ _QC_WNEW_SQL = "array(" + ", ".join(
 
 def _qc_w_row(spark: SparkSession, w_vals: list) -> DataFrame:
     """One-row weight relation from driver-held values (17 longs —
-    model-sized).  Values ride as a LocalRelation, so every step's plan
-    has the SAME shape and codegen cache hits across steps."""
+    model-sized): a Range+Project plan with the weights folded in as
+    literals.  Every step's plan has the same shape, so the corpus-side
+    whole-stage code is reused across steps; the literal side itself
+    differs per step."""
     lits = ", ".join(
         "CAST(NULL AS BIGINT)" if v is None else f"{int(v)}L" for v in w_vals
     )
@@ -1255,7 +1246,11 @@ def train_quality_classifier(
 ) -> DataFrame:
     """Train the fixed-point linear quality classifier; returns the one-row
     weight table (w: array<long>, micro-units).  API twin of the
-    registered query — point it at any (doc_id, x, y) featurization."""
+    registered query — point it at any (doc_id, x, y) featurization.
+
+    Runs EAGERLY: each of the ``iters`` steps executes its gradient job
+    and collects the weight row when this is called; only the returned
+    one-row table is a lazy plan."""
     spark = feats.sparkSession
     w_vals: list = [0] * _QC_NDIM
     for _ in range(iters):
@@ -1300,7 +1295,6 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds more than the model.  Gradient sums are BIGINT-exact up to
     ~1e12 docs per partition-tree; past that, swap the accumulator to
     decimal(38,0) — headroom noted, not needed at any test SF."""
-    tune(spark)
     feats = _qc_features(spark, sf_dir).localCheckpoint(eager=True)
     w = train_quality_classifier(feats)
     scored = _qc_score(feats, w)
@@ -1471,7 +1465,6 @@ def corpus_e2e_pipeline(
         _verified_pairs,
     )
 
-    tune(spark)
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
         spark,
@@ -1649,7 +1642,6 @@ def quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable doc_id hash, so the eval set is rerun- and growth-stable.
     Integer-ppm accuracy via BIGINT floor division (identical both
     engines)."""
-    tune(spark)
     split_bucket = (
         hash64(F.concat(F.lit("split-"), F.col("doc_id").cast("string"))) % 100
     )
@@ -1755,7 +1747,6 @@ def corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     top bits of a uniform hash), and the per-shard window sorts only
     corpus/shards rows — the shard count is the knob that keeps that
     slice executor-sized."""
-    tune(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
@@ -1871,7 +1862,6 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     is arithmetic over that bounded grid (sources × buckets rows) with
     single-row/512-row broadcasts.  The model-sized-state shape that
     runs unchanged at 100 TB."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     ws = F.filter(
         F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: x != F.lit("")

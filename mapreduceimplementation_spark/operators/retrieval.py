@@ -29,7 +29,6 @@ from mapreduceimplementation_spark.functions.text import word_tokens
 from mapreduceimplementation_spark.functions.vectors import dot, round6
 from mapreduceimplementation_spark.functions.vectors import sql_round6 as _sql_round6
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 _BM25_K1 = "CAST(1.2 AS DOUBLE)"  # term-frequency saturation
@@ -128,7 +127,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: postings build = src/mrapps/indexer.go:1-38 map
     shape with counts; the scoring join is ii.go's word->docs inversion
     consumed query-side."""
-    tune(spark)
     probes_of = lambda dl: dl.select(  # noqa: E731
         F.col("doc_id").alias("q_id")
     ).orderBy("q_id").limit(_BM25_PROBES)
@@ -295,7 +293,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes x corpus, and in production both sides are first cut to
     per-modality top-k making the fusion join trivially small.  The
     corpus-wide ranking here is the audit harness, same contract as C56."""
-    tune(spark)
     from mapreduceimplementation_spark.operators.vectors import _normed  # noqa: PLC0415
 
     n = _normed(spark, sf_dir)
@@ -433,7 +430,6 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform; text itself never joins or shuffles.  At 100 TB the
     positional postings are the stored index (written once, queried
     many), exactly how a search tier runs phrase queries."""
-    tune(spark)
     from mapreduceimplementation_spark.functions.text import word_array
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

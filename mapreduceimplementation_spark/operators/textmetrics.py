@@ -26,7 +26,7 @@ from mapreduceimplementation_spark.functions.text import (
     word_array,
 )
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import spread, tune
+from mapreduceimplementation_spark.session import spread
 from mapreduceimplementation_spark.sources.tables import load_table
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation —
@@ -50,7 +50,6 @@ _STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish token counts per document — the unit used for
     dataset size accounting and length filtering."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -90,7 +89,6 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality: stopword ratio (fluency proxy),
     punctuation density, length saturation — pure +-*/ so the score is
     bit-identical on any engine (no exp/log libm variance)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -166,7 +164,6 @@ def _argmax_sql() -> str:
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID with a deterministic alphabetical
     tie-break (greatest-score argmax)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -224,7 +221,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted by tests/test_textmetrics_plan.py).  A 100 TB corpus produces
     its 32-byte-per-doc sketches at scan speed; the earlier formulation
     (explode + distinct + window) shuffled every shingle twice."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hashes = F.array_sort(
         F.transform(F.array_distinct(char_ngrams("text", _FP_N)), lambda s: hash64(s))
@@ -298,7 +294,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduceimplementation_spark.functions.text import word_tokens
     from pyspark.sql.window import Window
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tf = (
         word_tokens(docs)
@@ -370,7 +365,6 @@ def top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduceimplementation_spark.functions.text import word_tokens
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     tf = (
         word_tokens(docs)
@@ -442,7 +436,6 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     in production only the sketch path runs over the stream, and the
     exact path is the verification harness (here it also picks which
     keys to report).  Estimate >= exact always (pytest-asserted)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id")
     keyed = ev.select(
         "user_id",
@@ -599,7 +592,6 @@ def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs reference: the reference has no sketch family; this extends its
     aggregation surface the way a training-data pipeline needs
     (SURVEY.md §2 C-block rationale)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     h = hash64(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
     rho_sql = _SQL_HLL_RHO.format(w=f"(h div {_HLL_M})")
@@ -717,7 +709,6 @@ def quality_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation.  The sample pass re-scans the sampled tenth
     with the doc_id predicate pushed down.  Docs shorter than 3 chars
     emit nothing (no trigrams — the honest answer)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = (
         docs.where(F.col("text").isNotNull() & (F.length("text") >= 3))
@@ -832,7 +823,6 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     by a differential pytest against the expression form, and by the
     unchanged DuckDB oracle.  Whitespace-only documents have no grams
     and drop out (all engines agree by construction)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = spread(docs.where(F.col("text").isNotNull()), spark)
     return base.mapInArrow(
@@ -1009,7 +999,6 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector is emitted comma-joined (engine-portable string, like
     embed_normalize's fixed-point output) ready for a downstream
     trainer."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ws = F.filter(F.split(F.col("text"), " "), lambda w: w != F.lit(""))
     bs = F.transform(
@@ -1087,7 +1076,6 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-independent; C28's discipline — raw double sums would vary
     with merge order and libm ulps), and the closed-form slope is
     evaluated in double from exact moments, rounded at 6dp."""
-    tune(spark)
     from pyspark.sql.window import Window
 
     from mapreduceimplementation_spark.functions.text import word_tokens
@@ -1173,7 +1161,6 @@ def corpus_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is applied AFTER aggregation (a HAVING, not a WHERE): pruning is a
     size/quality trade documented by the paper, and totals deliberately
     include pruned mass so fractions are true probabilities."""
-    tune(spark)
     base = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
@@ -1288,7 +1275,6 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, zero state, the text column read once; at 100 TB this
     fuses into the same codegen stage as the quality filters it
     precedes."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.where(F.col("text").isNotNull())
     d = F.col("doc_id")
@@ -1365,7 +1351,6 @@ def ngram_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     moving (doc_id, flag) pairs only.  The corpus text is scanned ONCE.
     Stop-word-like shingles with huge df are counts, not lists: no skew
     blowup."""
-    tune(spark)
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1431,7 +1416,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim-sized relation.  A full BPE trainer iterates this job with the
     vocabulary update applied between rounds — each round is exactly
     this shape."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("text")
     words = docs.where(F.col("text").isNotNull()).select(
         F.explode(
@@ -1534,7 +1518,6 @@ def events_hll_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production only the per-day path runs (incrementally, one day at
     a time — D13 is its streaming form); the direct path exists here to
     make the invariant check non-vacuous."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
     h = hash64(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
     rho_sql = _SQL_HLL_RHO.format(w=f"(h div {_HLL_M})")
@@ -1638,7 +1621,6 @@ def corpus_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: fully row-local — three regexp counts at scan speed
     inside one WholeStageCodegen span, no UDF, no shuffle at all; the
     scan reads (doc_id, text) only."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -1747,7 +1729,6 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties — identical semantics, no per-step struct allocation), and
     spread() keeps this HOF-heavy scan off a single local core.
     Together: ~5.4 s -> ~1.1 s, crc-identical output."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.where(
         F.col("text").isNotNull() & (F.length("text") >= _WIN_K + _WIN_W - 1)
@@ -1860,7 +1841,6 @@ def corpus_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     WholeStageCodegen span, no shuffle, scan reads (doc_id, text) only;
     at 100 TB this runs at scan speed ahead of the expensive dedup stages
     (same contract as quality_score / corpus_readability)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("text").isNotNull() & (F.length("text") > 0)).select(
         "doc_id",
@@ -1979,7 +1959,6 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: row-local regexp/array arithmetic at scan speed, ZERO
     shuffles — exactly the filter you run before paying for dedup."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     lines = F.filter(F.split("text", "\n"), lambda x: x != F.lit(""))
     lines_all = F.split("text", "\n")
@@ -2125,7 +2104,6 @@ def quality_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: row-local string/array arithmetic at scan speed, ZERO
     shuffles — like C63 this is the filter you run before paying for
     any shuffle-bearing dedup."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     lines_all = F.split("text", "\n")
 
@@ -2231,7 +2209,6 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: row-local regexp counting at scan speed folded by ONE
     partial-agg exchange bounded by the language count — the 100 TB cost
     is the scan, the shuffle carries a handful of rows per partition."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
     per_doc = docs.where(F.col("text").isNotNull()).select(
         "lang",
@@ -2305,7 +2282,6 @@ def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         distributed_rank,
     )
 
-    tune(spark)
     scored = quality_lm_score(spark, sf_dir).select("doc_id", "lm_score")
     ranked = distributed_rank(
         scored, order=[F.col("lm_score").desc(), F.col("doc_id")]
@@ -2553,7 +2529,6 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, and the merge applies row-local.  At 100 TB the vocab table is
     ~10⁷ rows regardless of corpus size: the loop costs T vocab passes,
     not T corpus passes."""
-    tune(spark)
     return train_bpe(_bpt_vocab0(spark, sf_dir))
 
 
@@ -2614,7 +2589,6 @@ def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (twice including the vocab count build), and no per-occurrence
     re-tokenization happens anywhere: each distinct word is encoded
     exactly once."""
-    tune(spark)
     tok = bpe_tokenized_vocab(_bpt_vocab0(spark, sf_dir)).select("w", "n_bpe")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docw = docs.where(F.col("text").isNotNull()).select(

@@ -37,7 +37,7 @@ from mapreduceimplementation_spark.functions.hashing import hash64, sql_hash64
 from mapreduceimplementation_spark.functions.hashing import py_hash64 as _h64_py
 from mapreduceimplementation_spark.functions.vectors import dot, l2_norm, round6, sql_round6
 from mapreduceimplementation_spark.registry import BASELINE_CLASS, register
-from mapreduceimplementation_spark.session import spread, tune
+from mapreduceimplementation_spark.session import spread
 from mapreduceimplementation_spark.sources.tables import load_table
 
 _DIM = 64  # embeddings table vector width (TESTDATA.md)
@@ -158,7 +158,6 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-even diverge on exact half boundaries (the documented
     embedding_outliers incident; floor of bit-equal doubles cannot).  The
     same formula fixes the norm's 6-digit grain."""
-    tune(spark)
     n = _normed(spark, sf_dir)
 
     def half_away(q: Column) -> Column:
@@ -254,7 +253,6 @@ def ann_topk(
     vectors always kept, so every query still gets a full ranking over
     the slice) — the mechanical escape the BASELINE_CLASS tag points at.
     """
-    tune(spark)
     n = _normed(spark, sf_dir)
     if sample_mod:
         n = n.where(
@@ -303,7 +301,8 @@ def _make_buckets_kernel(seed: str, tables: int, bits: int):
       a NaN dot — the kernel ORs in isnan(d);
     - a vector of length != _DIM made every zip_with product column null
       in the old form, nulling d and zeroing ALL that row's bits: such
-      rows emit code 0 for every table here too;
+      rows emit code 0 for every table here too, and so do null vectors
+      (a null d in the old form as well);
     - null ELEMENTS inside a vector have no exact NumPy twin (they
       null d, NaN does not) — the kernel asserts them absent (loud,
       not silently wrong; the embeddings contract has no null dims)."""
@@ -330,7 +329,7 @@ def _make_buckets_kernel(seed: str, tables: int, bits: int):
             flat_arr = col.flatten()
             assert flat_arr.null_count == 0, "_buckets: null vector element"
             flat = np.asarray(flat_arr, dtype=np.float64)
-            lens = np.asarray(col.value_lengths(), dtype=np.int64)
+            lens = np.asarray(col.value_lengths().fill_null(0), dtype=np.int64)
             starts = np.zeros(rows, dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
             codes = np.zeros((rows, tables), dtype=np.int32)
@@ -405,7 +404,6 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the LSH tradeoff: P[bucket match] = (1 - theta/pi)^bits per table,
     high for genuinely-close vectors, tiny for random ones.
     """
-    tune(spark)
     n = _normed(spark, sf_dir)
     b = _buckets(n, "hp", _LSH_TABLES, _LSH_BITS)
     qb = b.where(F.col("vec_id") < _Q_MAX).select(
@@ -463,7 +461,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits with corpus size to keep buckets bounded (the oracle replays the
     identical blocking, so results are engine-reproducible at any setting).
     """
-    tune(spark)
     n = _normed(spark, sf_dir)
     b = _buckets(n, "de", _DE_TABLES, _DE_BITS)
     a = b.select(F.col("vec_id").alias("a_id"), "t", "code")
@@ -636,7 +633,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-reproducible); swap in k-means centroids in production without
     touching the query plan.
     """
-    tune(spark)
     n = _normed(spark, sf_dir)
     cand = _ivf_candidates(n)
     nq = n.select(
@@ -697,7 +693,6 @@ def ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores + a broadcast equi-join on cell; the shared normalized scan
     is localCheckpoint'ed so the two consumers do not re-read parquet;
     the final rollup is |Q| rows."""
-    tune(spark)
     n = _normed(spark, sf_dir).localCheckpoint(eager=False)
     ex = _exact_topk(n)
     cand = _ivf_candidates(n).withColumn("caught", F.lit(True))
@@ -948,7 +943,6 @@ def kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums and rounded means are integer-exact, so Spark and the unrolled
     DuckDB CTE chain agree bit-for-bit at every iteration.
     """
-    tune(spark)
     # cache the working set once: every assignment pass reads the
     # materialized quantized vectors instead of re-scanning and
     # re-quantizing the corpus — the canonical Spark iterative-algorithm
@@ -1033,7 +1027,6 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k window partitions by src over candidate rows only.  Vectors
     whose buckets are all singletons emit no rows (no neighbors found —
     the honest LSH answer; lower bits if that matters)."""
-    tune(spark)
     n = _normed(spark, sf_dir)
     b = _buckets(n, "knn", _KNN_TABLES, _KNN_BITS)
     ids = F.col("ids")
@@ -1133,7 +1126,6 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     list; N rides a one-row broadcast.  The expensive LSH edge relation
     is localCheckpoint'ed ONCE and reused by outdeg + every iteration
     (SURVEY §6: checkpoint tiny-but-expensive relations before fan-out)."""
-    tune(spark)
     edges = (
         knn_graph(spark, sf_dir).select("src", "dst").localCheckpoint(eager=True)
     )
@@ -1235,7 +1227,6 @@ def pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the 64-long direction (model-only contract); the quantized
     working set is localCheckpoint'ed once.  Magnitude bounds fit long:
     |q·v| ≤ d·S² = 6.4e13, |y| ≤ n·S·(d·S) ≈ 1.3e17 at n=2000."""
-    tune(spark)
     vq = _km_quantized(spark, sf_dir).localCheckpoint(eager=True)
     v = [_PCA_S] * _DIM
     for _ in range(_PCA_ITERS):
@@ -1322,7 +1313,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     deploy the corpus is written bucketed BY cell and a query reads
     nprobe/k of the data — IVF as partition pruning, now with learned
     partitions."""
-    tune(spark)
     vq = _km_quantized(spark, sf_dir).localCheckpoint(eager=True)
     cm, _ = _km_train(vq)
     cm = cm.localCheckpoint(eager=True)  # model-sized; train once, use twice
@@ -1430,7 +1420,6 @@ def dedup_semantic(
     its own centroids on the slice (SemDeDup-on-a-shard, the paper's
     own scaling recipe), so it is a cost/production-path diagnostic,
     not a restriction of the full pair set."""
-    tune(spark)
     vq = _km_quantized(spark, sf_dir)
     if sample_mod:
         vq = vq.where(
@@ -1566,7 +1555,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint'ed once: it feeds the stats aggregate AND the final
     join, and without the pin each consumer re-derives the whole
     scan+centroid lineage (8 scans observed; 2 after)."""
-    tune(spark)
     e = spread(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
@@ -1688,7 +1676,6 @@ def knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge relation is localCheckpoint'ed once (model-sized: <= k*n
     rows) and all counts are integers — the whole result is exact, no
     float tolerance anywhere except the final 6dp clustering ratio."""
-    tune(spark)
     from mapreduceimplementation_spark.operators.dedup import _bucket_pairs
 
     edges = knn_graph(spark, sf_dir).select("src", "dst")
@@ -1828,7 +1815,6 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a row-local transform over the vector (codegen, no Python); the
     corpus is scanned once and never shuffled.  Reconstruction-error
     bounds are pytest-pinned (quantizer contract, not SQL surface)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("e")
     )
@@ -2129,7 +2115,6 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     only exchange is the {K}-row seed selection.  At 100 TB the plan is
     scan + broadcast-nested-loop of one row, exactly how a PQ encoder
     shards."""
-    tune(spark)
     emb = _pq_emb(spark, sf_dir)
     cb = _pq_codebook_np(emb)
     return spread(emb.select("vec_id", "e"), spark).mapInArrow(
@@ -2227,7 +2212,6 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, which production caps per-cell.  At 100 TB the corpus is
     written bucketed by cell with codes as a column: a query reads
     nprobe/{K_ivf} of the data and never touches raw vectors."""
-    tune(spark)
     n = _normed(spark, sf_dir)
     cand = _ivf_candidates(n)
     # three consumers (codebook seeds, corpus codes, query LUT) — checkpoint
@@ -2365,7 +2349,6 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned (q_id, same) — probe-bounded exchange — and the
     (|Q|·(1+{_HN_K}))-row survivor relation localCheckpoints before the
     tiny pos⋈neg broadcast join, so the corpus is never re-scanned."""
-    tune(spark)
     n = _normed_labeled(spark, sf_dir)
     q = n.select(
         F.col("vec_id").alias("q_id"),
@@ -2507,7 +2490,6 @@ def embedding_matryoshka_eval(
     survivor relation localCheckpoints before the tiny self-join
     against its own d={_DIM} slice.  ``checkpoint=False`` (tests only)
     exposes the full lineage to plan gates."""
-    tune(spark)
     n = _normed(spark, sf_dir)
     q = n.select(
         F.col("vec_id").alias("q_id"),
@@ -2631,7 +2613,6 @@ def corpus_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame
     share ONE vec_id window exchange carrying |corpus|·|benchmark|
     candidate rows.  At extreme benchmark sizes the candidate source
     swaps to C11b's IVF buckets — same downstream, as C62 demonstrates."""
-    tune(spark)
     n = _normed(spark, sf_dir)
     probes = n.where(F.col("vec_id") < _SD_Q).select(
         F.col("vec_id").alias("probe_id"),
@@ -2708,7 +2689,6 @@ def embedding_label_recall(
     channel), hence BASELINE_CLASS: at 100 TB run it on the same
     ``sample_mod`` slice ann_topk documents; labels join by vec_id
     (uniform key, broadcast-sized probe side)."""
-    tune(spark)
     n = _normed(spark, sf_dir)
     if sample_mod:
         n = n.where(

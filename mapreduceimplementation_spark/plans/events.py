@@ -17,7 +17,6 @@ from mapreduceimplementation_spark.functions.stable import (
     sql_round6,
 )
 from mapreduceimplementation_spark.registry import DENSITY_QUADRATIC, register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 
@@ -36,7 +35,6 @@ from mapreduceimplementation_spark.sources.tables import load_table
 def events_minutely(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-minute aggregation — the batch twin of D1's streaming
     window.  Single shuffle; distinct-user count is partial-aggregated."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "user_id", "value")
     return (
         ev.groupBy(
@@ -82,7 +80,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessionization with windows only (lag + running sum) —
     no Python, no iterative state.  One shuffle on user_id serves both
     window functions and the final aggregate (same partition key)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
@@ -119,7 +116,6 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction: JSON prop → typed column → aggregate.
     get_json_object runs JVM-side; at scale prefer from_json with an
     explicit schema so the parse is vectorized once."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "props")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
@@ -163,7 +159,6 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed in integer microseconds (unix_micros / epoch_us) so both
     engines agree exactly on sub-second timestamps.
     """
-    tune(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
@@ -221,7 +216,6 @@ def events_minutely_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     including sub-second timestamps and double round-trip."""
     from mapreduceimplementation_spark.sources.jsonl import read_events_jsonl
 
-    tune(spark)
     ev = read_events_jsonl(spark, sf_dir).select("ts", "event_type", "user_id", "value")
     return (
         ev.groupBy(
@@ -259,7 +253,6 @@ def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB feed swap to approx_percentile(value, p, accuracy) per
     t-digest/GK, trading the oracle-exact gate for bounded memory.  This
     operator is the exact baseline that pins the approximate one's error."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     return ev.groupBy("event_type").agg(
         round6(F.percentile("value", F.lit(0.5))).alias("p50"),
@@ -291,7 +284,6 @@ def events_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is total via the (ts, event_id) tie-break), then casts back to
     double — so every prefix, not just the final total, is bit-identical
     across engines and partitionings."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -337,7 +329,6 @@ def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges, but BOTH carry already-aggregated cells (≤ days x types
     rows), never raw events.  Absent combinations are 0, not null,
     matching the SQL CASE formulation."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "event_type"
     )
@@ -368,7 +359,6 @@ def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of three queries over the same 100 TB scan.  NULL dimension values
     encode the subtotal levels (real dims are never null here, so levels
     are unambiguous and the row set hash-matches the SQL ROLLUP)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "event_type", "value"
     )
@@ -399,7 +389,6 @@ def events_minutely_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     µs timestamps and shortest-round-trip doubles."""
     from mapreduceimplementation_spark.sources.csv import read_events_csv
 
-    tune(spark)
     ev = read_events_csv(spark, sf_dir).select("ts", "event_type", "user_id", "value")
     return (
         ev.groupBy(
@@ -438,7 +427,6 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimals and the quotient is rounded at the final projection,
     so every window's average is bit-identical across engines and
     partitionings."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -501,7 +489,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation shuffles the events table once per stage).  The per-user
     reduction and the final 3-row stack are a tiny follow-up aggregate on
     the already-partitioned data."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     w = Window.partitionBy("user_id")
     s1 = ev.withColumn(
@@ -576,7 +563,6 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell count is a second, already-tiny exchange.  Counting rows
     after the per-user day-dedup equals distinct users without a
     count-distinct aggregate."""
-    tune(spark)
     # day stays a midnight TIMESTAMP (not DATE): both engines' pandas
     # bridges agree on timestamps, and it matches events_minutely's
     # truncation convention
@@ -637,7 +623,6 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark does not reuse the daily subtree across consumers (same lesson
     as tfidf's df window).  Constant-count types (zero variance) are
     excluded rather than divided by zero."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
@@ -713,7 +698,6 @@ def events_minutely_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta read disjoint row sets — at scale the delta scan touches only
     new partitions), each partial-aggregates before its exchange, and
     the merge is a second tiny aggregation over rollup-sized rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     cut = F.lit(_INC_CUT).cast("timestamp")
 
@@ -761,7 +745,6 @@ def events_minutely_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     query can catch (sources/orc.py)."""
     from mapreduceimplementation_spark.sources.orc import read_events_orc
 
-    tune(spark)
     ev = read_events_orc(spark, sf_dir).select("ts", "event_type", "user_id", "value")
     return (
         ev.groupBy(
@@ -806,7 +789,6 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-identical in both engines (one double divide + floor — no
     accumulated float state), so even cell boundaries are
     engine-exact."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     bin_ = F.least(F.floor(F.col("value") / _HIST_WIDTH), F.lit(_HIST_BINS))
     return (
@@ -874,7 +856,6 @@ def events_minutely_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates once on the tiny (minute, type) key, then left-joins the
     spine (both sides cell-sized).  is_gap survives as the explicit
     outage signal."""
-    tune(spark)
     lo = F.lit(_GF_LO).cast("timestamp")
     hi = F.lit(_GF_HI).cast("timestamp")
     ev = load_table(spark, sf_dir, "events").where(
@@ -950,7 +931,6 @@ def events_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     5% against this exact twin per day in tests/test_tpch_extra.py
     (and per type in tests/test_pipeline.py), the same
     exact-pins-approx contract as B17's percentiles."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
     return (
         ev.groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -1003,7 +983,6 @@ def events_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERVAL bound — identical [ts-1h, ts] inclusive set, RANGE peers
     included by definition in both), and the frame sum accumulates exact
     DECIMAL — bit-stable at any partitioning."""
-    tune(spark)
     from pyspark.sql.window import Window
 
     hour_us = 3_600_000_000
@@ -1054,7 +1033,6 @@ def events_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed in exact DECIMAL before the final 6dp round; the event_id
     tie-break makes rank assignment total, and equal middle VALUES make
     the midpoint independent of which equal row got which rank."""
-    tune(spark)
     from mapreduceimplementation_spark.operators.mrcore import distributed_rank
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
@@ -1122,7 +1100,6 @@ def events_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoints accumulate exact DECIMAL before the 6dp round; the
     event_id tie-break keeps rank assignment total (equal middle values
     make the midpoint indifferent to which equal row got which rank)."""
-    tune(spark)
     from mapreduceimplementation_spark.operators.mrcore import distributed_rank
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1201,7 +1178,6 @@ def join_skewed_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast and takes over exactly when the dim outgrows it.  The
     salt never leaves the plan: output is the per-tier rollup, identical
     under any S."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
@@ -1326,7 +1302,6 @@ def events_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quantile conventions pinned to rank ceil(q·n/100) with (value,
     event_id) tie-break in BOTH engines — not percentile_cont/disc
     built-ins, whose interpolation conventions differ across engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "value", "event_id"
     )
@@ -1490,7 +1465,6 @@ def events_incident_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-hash join + one partial-agg exchange on incident_id.  The
     distinct-user count expands per (incident, user) — bounded by true
     audience, and C49's registers are the swap at extreme scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "user_id"
     )
@@ -1615,7 +1589,6 @@ def events_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy).  At 100 TB this is the canonical 'shuffle once, window
     many' plan; the dimension output is run-count-sized, much smaller
     than the log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -1705,7 +1678,6 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the off-diagonal rows.  Integer ppm avoids float division entirely
     (BIGINT `div` is identical in both engines on non-negative
     operands)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
     )
@@ -1812,7 +1784,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm via BIGINT floor division over the per-prev window on
     the TINY aggregated matrix (identical semantics both engines; no
     float division in the plan)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -1936,7 +1907,6 @@ def events_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ∝ purchases × N, linear in activity), or fall back to first/last-
     touch-only attribution, which needs one min/max window instead of
     the pair expansion."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
@@ -2133,7 +2103,6 @@ def events_ab_test_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arm rollup aggregates an already-aggregated relation into 2
     rows; the delta window runs on those 2 rows.  No broadcast of
     event-volume data, no join anywhere."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
@@ -2211,7 +2180,6 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, no global sort) and the
     1-row total broadcasts; path_counts localCheckpoints (consumed by
     rows AND the total)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -2344,7 +2312,6 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     table).  The {_EWMA_K}-tap truncation is what keeps the frame and
     the integer width bounded at ANY horizon — the same reason a
     production EWMA job is windowed (see module constant)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
@@ -2432,7 +2399,6 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one event_type window partitioning shared by the FIR, both lags and
     the final per-type rollup; the backtest relation is calendar-bounded
     (days × types), never event-volume-sized."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"

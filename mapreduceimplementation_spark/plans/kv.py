@@ -17,7 +17,6 @@ from pyspark.sql.window import Window, WindowSpec
 
 from mapreduceimplementation_spark.functions.hashing import hash64, sql_hash64
 from mapreduceimplementation_spark.registry import LOG_MASS_LINEAR, register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 N_SHARDS = 64
@@ -83,7 +82,6 @@ def kv_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy and is aliased to `key` only in the final projection: renaming
     mid-plan makes ENSURE_REQUIREMENTS re-shuffle on the "new" column, and
     this plan's one-exchange shape is pinned by tests/test_plan_shapes.py."""
-    tune(spark)
     cut = _kv_ops(spark, sf_dir).withColumn(
         "last_put",
         F.max(F.when(F.col("op") == "put", F.col("seq")).otherwise(0)).over(
@@ -117,7 +115,6 @@ def shard_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     controllers compute the identical config (the property the reference's
     Raft-replicated ctrler guarantees by consensus, achieved here by
     determinism)."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     n_groups = nation.count()  # bounded dim (25) — a metadata-scale count
     shards = spark.range(N_SHARDS).select(F.col("id").alias("shard"))
@@ -163,7 +160,6 @@ def shard_rebalance_hrw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: each shard's owner in the full config, its owner after the
     deterministic Leave set (gid % 5 == 3) departs, and whether it moved.
     """
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey")
     shards = spark.range(N_SHARDS).select(F.col("id").alias("shard"))
     pairs = shards.crossJoin(F.broadcast(nation)).select(
@@ -242,7 +238,6 @@ def kv_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     renamed only in the final projection — see kv_apply_log — and the
     single-exchange shape is pinned by tests/test_plan_shapes.py).
     """
-    tune(spark)
     ops = _kv_ops(spark, sf_dir)
     wk = Window.partitionBy("user_id")
     is_put = F.col("op") == "put"
@@ -349,7 +344,6 @@ def raft_committed_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a bounded 10×5 crossJoin and a 5-element sort_array — the full
     log is never shuffled, only counted.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id")
     ops = ev.select(
         (
@@ -484,7 +478,6 @@ def config_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side loop.  The registered query fixes the op log for the
     oracle; the real API is ``replay_config_log`` below — run any
     Join/Leave/Move log you like."""
-    tune(spark)
     gids = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("gid")
     )
@@ -668,7 +661,6 @@ def shardkv_migration_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     state row out only to the configs that actually move its shard —
     no shuffle of the state on the diff key, no driver loop over
     configs."""
-    tune(spark)
     # the config history is control-plane-sized ((K+1) x NShards rows);
     # checkpoint it once so the self-diff below doesn't re-derive the whole
     # ctrler replay for each join side (halves the plan's exchanges) — at
@@ -758,7 +750,6 @@ def derive_kv_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (key, kind, val, inv, ret, opid) — ``linearizability_audit``'s
     input contract."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -1253,7 +1244,6 @@ def kv_linearizability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule as its literal quadratic EXISTS — obviously-correct-by-inspection
     SQL — so a green hash certifies the scalable window/probe formulation
     against the textbook definition."""
-    tune(spark)
     return linearizability_audit(derive_kv_history(spark, sf_dir))
 
 
@@ -1341,7 +1331,6 @@ def lock_grant_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the same partitioning (window partitionBy == groupBy key =>
     ENSURE_REQUIREMENTS adds no second shuffle); everything else is
     row-local.  Per-lock state = that lock's op count, never cross-lock."""
-    tune(spark)
     return audit_lock_grants(derive_lock_history(spark, sf_dir))
 
 
@@ -1475,7 +1464,6 @@ def view_change_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins broadcast the dim, the single-partition ordered window is by
     nature of a GLOBAL view sequence (a real deployment has one view
     service; per-cluster logs would partition by cluster id)."""
-    tune(spark)
     v = F.col("id")
     fault = hash64(v.cast("string"), salt="vwf") % _VIEW_FAULT_EVERY == 0
     log = spark.range(1, _N_VIEWS + 1).select(
@@ -1565,7 +1553,6 @@ def derive_kv_append_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (key, kind 'put'|'append'|'get', val string, inv, ret, opid)
     — ``append_linearizability_audit``'s input contract."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -2260,7 +2247,6 @@ def derive_raft_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation rate is a property of the bounded cell grid, not of event
     volume, and the verdict mix is scale-stable; 1/13 of RPCs are
     denied.  Everything is md5-derived, bit-identical in both engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id").cast("string")
     term = hash64(eid, salt="rfe-t") % _RFE_TERMS
@@ -2451,7 +2437,6 @@ def derive_raft_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRUPTED value (the committed-divergence bug checkLogs exists to
     catch) — so both violation rates are properties of the bounded cell
     grid and the verdict mix is scale-stable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id").cast("string")
     server = hash64(eid, salt="rfl-p") % _RAFT_PEERS
@@ -2589,7 +2574,6 @@ def derive_raft_leader_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix is a property of the bounded cell grid and stays scale-stable
     (the B63/B64 lesson: never inject per-event).  Retried probes of a
     cell always agree; distinct() collapses them."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id").cast("string")
     term = hash64(eid, salt="rlc-t") % _RLC_TERMS
@@ -2770,7 +2754,6 @@ def raft_snapshot_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     because scheduling dominates.  Linear and scale-safe: at 100 TB the
     audit costs one pass over the log mass, which is the floor for any
     checker that must recompute every prefix."""
-    tune(spark)
     ops = _kv_ops(spark, sf_dir)
     g = ops.groupBy("user_id").agg(
         F.array_sort(F.collect_list(F.struct("seq", "op", "sval"))).alias(
@@ -2943,7 +2926,6 @@ def kv_client_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real server is per-client-bounded (one lastSeq per client); here
     it is a window function, so 100 TB of attempts stream through
     without any driver-side table."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", "value"
     )
@@ -3196,7 +3178,6 @@ def shardkv_gc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape and ``derive_gc_reports`` for the deterministic leak
     injection; composes B30's config-diff machinery (the same cfg/diff
     relations, localCheckpoint'ed once)."""
-    tune(spark)
     cfg = (
         config_log_replay(spark, sf_dir)
         .select("num", "shard", "gid")
@@ -3354,7 +3335,6 @@ def derive_persistence_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     are properties of the bounded cell grids, not event volume, so the
     verdict mix is scale-stable; everything is md5-derived and
     bit-identical on both engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id").cast("string")
     peer = hash64(eid, salt="rfp-p") % _RAFT_PEERS
@@ -3614,7 +3594,6 @@ def derive_availability_trace(
     Injections (md5 over the bounded cell grid, scale-stable): 1/9 of
     unmoved cells STALL some ops, 1/7 of moved cells serve {_AV_EARLY}
     ordinals EARLY, 1/8 of moved cells never serve in the window."""
-    tune(spark)
     prev = cfg.select(
         (F.col("num") + 1).alias("nnum"),
         F.col("shard").alias("pshard"),
@@ -3753,7 +3732,6 @@ def shardkv_availability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole reconfiguration finished)?  See ``audit_shard_availability``
     for the verdicts and scale shape, ``derive_availability_trace`` for
     the per-cell injection recipe (B78's discipline)."""
-    tune(spark)
     cfg = (
         config_log_replay(spark, sf_dir)
         .select("num", "shard", "gid")
@@ -3849,7 +3827,6 @@ def derive_session_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     read that may or may not break a session guarantee depending on
     what THIS session did before, which is exactly what the audit must
     distinguish."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )

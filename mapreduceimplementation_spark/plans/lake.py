@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 #: MERGE cutoff: events before the cut are the base table, events at or
@@ -129,7 +128,6 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite.  (With a true incremental feed you'd keep the join but
     partition both sides on user_id — the shape join_skewed_salted and
     write_bucketed exhibit.)"""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", "value"
     )
@@ -233,7 +231,6 @@ def table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     change mask is concat_ws over per-column CASE flags, all inside
     whole-stage codegen; output is key-cardinality, far smaller than the
     log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", "value"
     )
@@ -357,7 +354,6 @@ def table_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing is two window frames over the same (day) partitioning — a
     manifest is files-count-sized, millions of rows at 100 TB, trivially
     windowable; nothing about the DATA volume enters the plan."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     width = _CMP_W_BASE + hash64(
         F.concat(

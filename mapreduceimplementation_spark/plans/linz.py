@@ -78,7 +78,6 @@ from mapreduceimplementation_spark.plans.kv import (
     cluster_crossings,
 )
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 
 _LLZ_LOCKS = 50  # clients share locks 50-to-1: sessions interleave
@@ -569,7 +568,6 @@ def derive_lock_token_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (key, opid, inv, ret, kind, granted, obs, prod) —
     ``LockTokenModel``'s contract (obs/prod state strings)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     eid = F.col("event_id").cast("string")
     base = ev.select(
@@ -903,7 +901,6 @@ def lock_linearizability(spark: SparkSession, sf_dir: str) -> DataFrame:
     restatement, like B51's quadratic EXISTS): ~5 min at sf0.1 is a
     certification cost, not a serving cost — the Spark side stays
     O(states · log chain)."""
-    tune(spark)
     return audit_linearizability(
         derive_lock_token_history(spark, sf_dir), LockTokenModel
     )
@@ -969,7 +966,6 @@ def derive_ctrl_config_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (key, opid, inv, ret, kind, obs, prod) —
     ``ConfigEpochModel``'s contract."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     eid = F.col("event_id").cast("string")
     base = ev.select(
@@ -1110,7 +1106,6 @@ def ctrl_linearizability(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME generic restatement (``generic_audit_oracle_sql``) on this
     model's derivation — one oracle template now certifies every model,
     which is itself evidence the abstraction is real."""
-    tune(spark)
     return audit_linearizability(
         derive_ctrl_config_history(spark, sf_dir), ConfigEpochModel
     )

@@ -26,7 +26,7 @@ from mapreduceimplementation_spark.functions.stable import (
     sql_dsum,
 )
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import spread, tune
+from mapreduceimplementation_spark.session import spread
 from mapreduceimplementation_spark.sources.tables import load_table
 
 
@@ -50,7 +50,6 @@ from mapreduceimplementation_spark.sources.tables import load_table
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: single-pass scan + one shuffle on a tiny key space.
     The shipdate predicate reaches the parquet scan (PushedFilters)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -103,7 +102,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the top-k ordering engine-independent; top-k via
     orderBy().limit(10) → TakeOrderedAndProject (per-partition bounded
     heaps, then a 10-row merge on the driver — never a global sort)."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
@@ -152,7 +150,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join.  region+nation are provably bounded →
     explicit broadcast; the customer⋈orders⋈lineitem chain shuffles on
     keys with AQE free to reorder/skew-split."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -201,7 +198,6 @@ def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed top-k per group: one shuffle on the partition key; nation
     broadcast.  c_acctbal is stored data (not a computed float) so ordering
     is engine-stable with the custkey tie-break."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
@@ -235,7 +231,6 @@ def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def part_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (TPC-H Q14 shape) — CASE inside exact sums,
     share computed on the exact values then rounded once."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").select("p_brand", "p_type", "p_retailprice")
     promo = F.when(
         F.col("p_type").isin("PROMO", "ECONOMY"), F.col("p_retailprice")
@@ -263,7 +258,6 @@ def part_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS as a left-semi join (no fact duplication,
     no distinct needed) then a tiny-key aggregate."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -321,7 +315,6 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (part_a, part_b) and the final top-20 is TakeOrderedAndProject
     (per-partition heaps, 20-row driver merge) with full (count, a, b)
     tie-break determinism."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
@@ -391,7 +384,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     as BIGINT makes the HAVING frontier exact on any partitioning.
     Top-20 is TakeOrderedAndProject on the stored (not aggregated)
     o_totalprice with an orderkey tie-break."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
@@ -458,7 +450,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan as a PushedFilter; the final aggregate has a tiny
     (nation, nation, year) key space with map-side partial agg.  Revenue
     sums as exact DECIMAL (order-independent at any partitioning)."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     two = nation.where(F.col("n_name").isin(_Q7_NATION_A, _Q7_NATION_B))
     supp = (
@@ -534,7 +525,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated (customer-sized) relation, not on facts; top-20 is
     TakeOrderedAndProject with rounded-decimal revenue + custkey
     tie-break so the frontier is engine- and partitioning-stable."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
@@ -608,7 +598,6 @@ def q22_missed_opportunities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact decimal mean rounded to 6dp — an unrounded double mean
     would depend on summation order and could flip frontier customers
     between runs (the davg discipline from B1)."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_nationkey"
     )
@@ -672,7 +661,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg, and both sums accumulate exact DECIMAL before the final
     double division + 6dp round (the conditional-share discipline of
     B5)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-09-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
@@ -720,7 +708,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-stable at any partitioning.  The discount band compares
     doubles against the same literals in both engines — identical IEEE
     constants, identical frontier."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -764,7 +751,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dozen rows.  Left-join skew on popular customers is AQE's skew-join
     case; the key is the customer primary key so fanout equals that
     customer's order count, bounded by data model not corpus size."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") != "1-URGENT"
@@ -812,7 +798,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality — comparing raw double sums for equality would make "ties
     with the max" partitioning-dependent; rounded at 2dp the tie set is
     engine-exact.  Supplier joins broadcast on the bounded dim."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
@@ -873,7 +858,6 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a second scan + self-join.  The window average is decimal-exact
     (sum DECIMAL / count) so the 0.2x threshold is the same IEEE double
     in both engines; the final one-row sum is DECIMAL with round-at-2dp."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").where(
         F.col("p_brand") == _Q17_BRAND
     ).select("p_partkey")
@@ -940,7 +924,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual join filter over the pre-shrunk inputs.  Hand-deriving the
     hull is the documented pattern for OR-of-ANDs at scale — the
     difference between scanning 100 TB and scanning the hull's slice."""
-    tune(spark)
     brands = sorted({a[0] for a in _Q19_ARMS})
     max_size = max(a[2] for a in _Q19_ARMS)
     min_qty = min(a[3] for a in _Q19_ARMS)
@@ -1023,7 +1006,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum over the SAME joined relation (no second pass, the B5
     discipline lifted through a 7-table join) and rounds at 6dp so the
     per-year ratio is partitioning-stable."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").where(
         F.col("r_name") == _Q8_REGION
@@ -1113,7 +1095,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders joins shuffle on orderkey contributing only (orderkey, year).
     The final key space (nation x year) is tiny with map-side partials;
     decimal-exact sums round-trip bit-stable."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").where(
         F.col("p_name").contains(_Q9_NAME_FRAGMENT)
     ).select("p_partkey")
@@ -1183,7 +1164,6 @@ def customer_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership engine-exact (ORDER BY c_acctbal alone would leave equal
     balances straddling a boundary in engine-dependent order); decile
     means are decimal-exact, bounds rounded at 2dp."""
-    tune(spark)
     from mapreduceimplementation_spark.operators.mrcore import distributed_ntile
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
@@ -1254,7 +1234,6 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg; the 20 winning pairs then join the item supports and
     the ONE-ROW total as broadcasts.  Counts are exact integers; the
     three ratios are single divisions rounded at 6dp."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
@@ -1461,7 +1440,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     double supplycost would flip ties between partitionings.  Total
     order (acctbal desc, nation, name, partkey) before the top-100 cut;
     s_name is unique so the cut is deterministic."""
-    tune(spark)
     part = (
         load_table(spark, sf_dir, "part")
         .where(
@@ -1555,7 +1533,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     value*{_Q11_SCALE} > total — no float fraction, so frontier parts
     cannot flip between engines or partitionings (the Q22 lesson applied
     to Q11's 0.0001-fraction HAVING)."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation").where(
         F.col("n_name") == _Q11_NATION
     )
@@ -1629,7 +1606,6 @@ def q16_parts_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFra
     Spark's two-phase distinct expand on the tiny (brand, type, size)
     key — exchange bounded by true (cell x supplier) pairs, never raw
     partsupp volume."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != _Q16_BRAND)
         & (F.col("p_type") != _Q16_TYPE)
@@ -1709,7 +1685,6 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantities are integral); qualifying supplier keys collapse to a
     DISTINCT dim-sized set that LEFT SEMI-joins the nation's suppliers.
     Nothing fact-sized is ever joined to anything fact-sized."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit(_Q20_YEAR_LO).cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(_Q20_YEAR_HI).cast("timestamp"))
@@ -1798,7 +1773,7 @@ def lineitem_dated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # l_shipdate reads as TIMESTAMP_NTZ from this testdata generation;
     # unix_micros needs session-tz TIMESTAMP, and callers run under
-    # tune()'s UTC session so the cast is lossless (the events.ts rule
+    # the tuned UTC session so the cast is lossless (the events.ts rule
     # in sources/tables.py applied here)
     ship_us = F.unix_micros(F.col("l_shipdate").cast("timestamp"))
     return li.select(
@@ -1858,7 +1833,6 @@ def q12_shipping_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     join to orders; the priority CASE then aggregates on the 2-value
     shipmode key (map-side partials collapse everything).  Integer-µs
     date algebra keeps the late-line frontier engine-exact."""
-    tune(spark)
     lo = F.unix_micros(F.lit(_Q12_LO).cast("timestamp"))
     hi = F.unix_micros(F.lit(_Q12_HI).cast("timestamp"))
     li = lineitem_dated(spark, sf_dir).where(
@@ -1927,7 +1901,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning; the nation's suppliers broadcast into the late-line
     candidates BEFORE the shuffle.  The oracle states both EXISTS
     literally; a green hash certifies the decorrelation."""
-    tune(spark)
     # project to the 3 columns this query consumes BEFORE the checkpoint:
     # localCheckpoint materializes every column it is handed, so the
     # unprojected version paid lineitem_dated's l_shipmode md5 for a
@@ -2022,7 +1995,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local on the dated lineitem scan BEFORE the l_orderkey LEFT SEMI
     (no fact duplication, no distinct); the final aggregate collapses on
     the 5-value priority key via map-side partials."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit(_Q4_LO).cast("timestamp"))
         & (F.col("o_orderdate") < F.lit(_Q4_HI).cast("timestamp"))

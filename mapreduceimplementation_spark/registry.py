@@ -2,13 +2,18 @@
 
 Each operator registers a (spark, sf_dir) -> DataFrame callable plus an
 optional DuckDB-runnable ANSI SQL oracle string.  The driver contract in
-``__spark_entry__.py`` is a thin view over these dicts.
+``__spark_entry__.py`` is a thin view over these dicts.  ``register``
+applies ``session.tune`` on entry to every callable, so no query sets
+up its own session confs.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
+
+from mapreduceimplementation_spark.session import tune
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
@@ -62,17 +67,24 @@ LINEAR_TWIN: dict[str, str] = {
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator: register a query callable, its optional SQL oracle, and
-    optional registry tags (e.g. BASELINE_CLASS)."""
+    optional registry tags (e.g. BASELINE_CLASS).  The registered (and
+    returned) callable tunes the session before running ``fn``."""
 
     def deco(fn):
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def query(spark, *args, **kwargs):
+            tune(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = query
         if oracle is not None:
             ORACLES[name] = oracle.strip()
         if tags:
             TAGS[name] = frozenset(tags)
-        return fn
+        return query
 
     return deco
 

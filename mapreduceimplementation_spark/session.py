@@ -1,18 +1,28 @@
-"""SparkSession factory + runtime tuning.
+"""SparkSession factory, runtime tuning, and scoped conf changes.
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; the same configs are the
 ones we'd set on a 1000-executor cluster (AQE, partial agg, Arrow), with
 ``spark.sql.shuffle.partitions`` scaled to cluster cores at deploy time.
+
+This is the only module that writes session confs.  ``registry.register``
+applies ``tune()`` once on entry to every query, so a session built
+elsewhere gets the same confs as one from ``get_spark``.  Anything
+that needs a different value for part of a query (the streaming
+shuffle-partition cap, the no-data-batch skip, a sink's timestamp
+encoding) takes it through ``scoped_conf``, which puts the session back
+exactly as it found it — no query leaves state behind for the next one.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable SQL confs, applied defensively at the top of every query
-# entry point because the driver may hand us a session we did not build.
+# Runtime-settable SQL confs, applied on entry to every registered query
+# because a caller may hand us a session it built itself.
 _RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -21,6 +31,11 @@ _RUNTIME_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # 32 matches local[32]; on a real cluster set ~2-3x total cores.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # Spark's vectorized reader rejects TIMESTAMP(NANOS) parquet columns;
+    # this surfaces them as long nanos, which the events loaders
+    # (sources/tables.py, streaming/windowed.py) convert to micros.  It
+    # must hold while a plan EXECUTES, not just while it is built.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -32,6 +47,26 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # conf locked in this deployment; keep going
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set ``conf`` for the duration of the block, then restore each key
+    to its exact previous state: its old value if the session had one
+    set, otherwise unset (so a Spark default is not pinned as an
+    explicit setting).  Not for blocks that start other streams — a
+    concurrently started query would inherit the scoped values."""
+    was_set = spark.conf.getAll
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k in conf:
+            if k in was_set:
+                spark.conf.set(k, was_set[k])
+            else:
+                spark.conf.unset(k)
 
 
 def spread(df, spark: SparkSession):

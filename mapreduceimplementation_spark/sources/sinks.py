@@ -24,6 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-export convenience)
 
+from mapreduceimplementation_spark.session import scoped_conf
+
+#: int64 micros instead of INT96, which carries no min/max statistics
+_MICROS_TS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+
 
 def write_partitioned(
     df: DataFrame, path: str, *partition_cols: str, mode: str = "overwrite"
@@ -120,22 +125,13 @@ def write_sorted(
     timestamp sort columns actually carry the stats the pushdown needs;
     a lake that wants time-range skipping must make that choice
     table-wide."""
-    spark = df.sparkSession
-    key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(df.sparkSession, _MICROS_TS):
         (
             df.repartitionByRange(n_files, sort_col)
             .sortWithinPartitions(sort_col)
             .write.mode(mode)
             .parquet(path)
         )
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def write_zordered(
@@ -170,7 +166,6 @@ def write_zordered(
     float rounding here is harmless.  Timestamps are forced to int64
     micros for the same reason as write_sorted: INT96 carries no stats.
     """
-    spark = df.sparkSession
     stats = df.agg(
         *[F.min(c).cast("double").alias(f"mn_{i}") for i, c in enumerate(cols)],
         *[F.max(c).cast("double").alias(f"mx_{i}") for i, c in enumerate(cols)],
@@ -192,10 +187,7 @@ def write_zordered(
             z = z + F.shiftleft(
                 F.shiftright(cell, i).bitwiseAND(F.lit(1)), i * len(cols) + d
             )
-    key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(df.sparkSession, _MICROS_TS):
         (
             df.withColumn("__z", z)
             .repartitionByRange(n_files, "__z")
@@ -204,11 +196,6 @@ def write_zordered(
             .write.mode(mode)
             .parquet(path)
         )
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def compact_files(

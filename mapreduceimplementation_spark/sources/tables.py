@@ -59,9 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None:
         cached = _PLAN_CACHE.get(key)
         if cached is not None:
-            if name == "events":
-                # the nanosAsLong conf must be (re)set while the plan runs
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             return cached
     df = _load_table_uncached(spark, sf_dir, name, path)
     if key is not None:
@@ -79,8 +76,8 @@ def _load_table_uncached(
         # TIMESTAMP(MICROS) isAdjustedToUTC=false (reads as TIMESTAMP_NTZ),
         # or UTC-adjusted micros (reads as TIMESTAMP already).  Normalize
         # all three to session-tz TIMESTAMP micros — the value DuckDB's
-        # micro-resolution TIMESTAMP oracle sees.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # micro-resolution TIMESTAMP oracle sees.  The nanosAsLong conf
+        # comes from session.tune.
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -89,7 +86,7 @@ def _load_table_uncached(
         if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(ts_type, T.TimestampNTZType):
-            # session tz is UTC (tune()), so the cast is lossless
+            # session tz is UTC (session.tune), so the cast is lossless
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)

@@ -28,11 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _size_stream_state,
-    _skip_no_data_batch,
+    _run_stream,
     _stop_query,
 )
 
@@ -44,7 +42,6 @@ def run_dedup_stream(
 ) -> DataFrame:
     """Run the streaming dedup over `path` to completion; return the
     distinct-key table from the memory sink."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "event_type", F.date_trunc("day", "ts").alias("day")
@@ -55,15 +52,13 @@ def run_dedup_stream(
     )
     # dropDuplicates emits each first-seen key eagerly; the trailing
     # no-data batch would only evict expired key state — skipped.
-    with _skip_no_data_batch(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(
+        spark,
+        deduped.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append"),
+        skip_no_data_batch=True,
+    )
     return spark.table(sink)
 
 
@@ -77,5 +72,4 @@ def run_dedup_stream(
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-seen-wins streaming dedup on (user_id, event_type, day) with
     watermark-bounded state; equals batch DISTINCT (full hash gate)."""
-    tune(spark)
     return run_dedup_stream(spark, os.path.join(sf_dir, "events.parquet"))

@@ -23,11 +23,10 @@ from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.functions.stable import dsum, sql_dsum
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.sources.tables import load_table
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _size_stream_state,
+    _run_stream,
     _stop_query,
 )
 
@@ -48,8 +47,6 @@ def user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_enriched_stream(
     spark: SparkSession, path: str, sf_dir: str, sink: str = _SINK, **options
 ) -> DataFrame:
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     prof = user_tiers(spark, sf_dir)
@@ -63,14 +60,12 @@ def run_enriched_stream(
         )
         .select(F.col("win.start").alias("day"), "tier", "n_events", "total_value")
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 

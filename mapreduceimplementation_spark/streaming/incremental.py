@@ -28,11 +28,9 @@ from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.functions.stable import dsum, sql_dsum
 from mapreduceimplementation_spark.registry import ORACLES, register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _size_stream_state,
-    _skip_no_data_batch,
+    _run_stream,
 )
 
 _N_CHUNKS = 4
@@ -131,8 +129,6 @@ def run_incremental_rollup(
     number of microbatches that carried updates).  ``feed_dir`` overrides
     the default chunked-events feed (tests use it to force windows that
     straddle microbatch boundaries)."""
-    tune(spark)
-    _size_stream_state(spark)
     feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
     # default fixture: 2 files/trigger = two microbatches (the minimal
     # cross-batch proof; see _chronological_feed).  Test-supplied feeds
@@ -163,14 +159,12 @@ def run_incremental_rollup(
     # update-mode agg: the trailing no-data batch only evicts state whose
     # final value was already upserted when it last changed — skipped
     # (r11 profile: ~0.7 s of store scans + an empty foreachBatch call).
-    with _skip_no_data_batch(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(
+        spark,
+        agg.writeStream.outputMode("update")
+        .foreachBatch(_upsert),
+        skip_no_data_batch=True,
+    )
     assert state["dir"] is not None, "stream produced no updates"
     return spark.read.parquet(state["dir"]), state["batches"]
 
@@ -238,8 +232,6 @@ def streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-microbatch cell accumulation is count-exact."""
     from mapreduceimplementation_spark.streaming.windowed import _stop_query
 
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, _D9_SINK)
     feed = _chronological_feed(sf_dir)
     ev = _events_stream(
@@ -255,14 +247,12 @@ def streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bin", "bin_lo")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(_D9_SINK)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(_D9_SINK)
 
 
@@ -277,8 +267,6 @@ def run_ab_stream(
     serving table, number of microbatches that carried updates)."""
     from mapreduceimplementation_spark.plans.events import ab_per_user_facts
 
-    tune(spark)
-    _size_stream_state(spark)
     feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
     # default fixture: 2 files/trigger = two microbatches (the minimal
     # cross-batch proof; see _chronological_feed).  Test-supplied feeds
@@ -293,13 +281,11 @@ def run_ab_stream(
     state = {"dir": None, "batches": 0}
     _upsert = _make_upsert(work, state, ["variant", "user_id"])
 
-    q = (
+    _run_stream(
+        spark,
         per_user.writeStream.outputMode("update")
-        .foreachBatch(_upsert)
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(_upsert),
     )
-    q.awaitTermination()
     assert state["dir"] is not None, "stream produced no updates"
     return spark.read.parquet(state["dir"]), state["batches"]
 
@@ -371,8 +357,6 @@ def run_anomaly_stream(
     table they derive from is exactly maintainable.  Cell cardinality is
     days × types — calendar-bounded, never event-volume-bounded — so the
     detector query is serving-table-sized at any corpus scale."""
-    tune(spark)
-    _size_stream_state(spark)
     feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
     # default fixture: 2 files/trigger = two microbatches (the minimal
     # cross-batch proof; see _chronological_feed).  Test-supplied feeds
@@ -393,14 +377,12 @@ def run_anomaly_stream(
     _upsert = _make_upsert(work, state, ["day", "event_type"])
 
     # update-mode agg: no-data batch is eviction-only — skipped (see D7)
-    with _skip_no_data_batch(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(
+        spark,
+        agg.writeStream.outputMode("update")
+        .foreachBatch(_upsert),
+        skip_no_data_batch=True,
+    )
     assert state["dir"] is not None, "stream produced no updates"
     return spark.read.parquet(state["dir"]), state["batches"]
 
@@ -531,7 +513,6 @@ def run_ewma_stream(
     either grows the open day's count or closes it)."""
     from mapreduceimplementation_spark.streaming.windowed import _stop_query
 
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
@@ -545,14 +526,12 @@ def run_ewma_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    _run_stream(
+        spark,
         log.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
     )
-    q.awaitTermination()
     pick = _PsWindow.partitionBy("event_type", "day").orderBy(
         F.col("closed").desc(), F.col("c").desc()
     )
@@ -571,5 +550,4 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer FIR shared bit-for-bit with the batch twin, changelog
     emission compacted deterministically; shares B83's oracle verbatim.
     See run_ewma_stream."""
-    tune(spark)
     return run_ewma_stream(spark, os.path.join(sf_dir, "events.parquet"))

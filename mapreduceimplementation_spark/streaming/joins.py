@@ -28,11 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.registry import DENSITY_QUADRATIC, register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _size_stream_state,
-    _skip_no_data_batch,
+    _run_stream,
     _stop_query,
 )
 
@@ -44,7 +42,6 @@ def run_stream_join(
 ) -> DataFrame:
     """Run the click⋈purchase stream-stream join over `path` to
     completion; return the joined pairs from the memory sink."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     clicks = (
         _events_stream(spark, path, **source_options)
@@ -89,15 +86,13 @@ def run_stream_join(
     # trailing no-data batch would only evict state (r11 profile: it cost
     # as much as the data batch — a full join-state scan + 32 store
     # commits for zero output rows), so it is skipped.
-    with _skip_no_data_batch(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(
+        spark,
+        joined.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append"),
+        skip_no_data_batch=True,
+    )
     return spark.table(sink)
 
 
@@ -122,7 +117,6 @@ def run_stream_join(
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution as a watermarked stream-stream join;
     equals the batch interval join (full hash gate)."""
-    tune(spark)
     return run_stream_join(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -147,7 +141,6 @@ def run_left_outer_join(
     """Run the click⟕purchase LEFT-OUTER interval join over `path` to
     completion; unmatched clicks emit one NULL-purchase row once the
     watermark passes their match window (state eviction)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     cutoff = F.lit(_LOJ_CLICK_CUTOFF).cast("timestamp")
     clicks = (
@@ -197,14 +190,12 @@ def run_left_outer_join(
             "micros_after_click"
         ),
     )
-    q = (
+    _run_stream(
+        spark,
         joined.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -234,7 +225,6 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-outer twin exactly (full hash gate): matched pairs stream out as
     found; NULL rows emit at state eviction, flushed by the trailing
     no-data microbatch."""
-    tune(spark)
     return run_left_outer_join(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -261,7 +251,6 @@ def run_full_outer_join(
     AND each unmatched purchase emits one NULL row at state eviction —
     the only shape that exercises watermark-forced output on BOTH
     buffers."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     cutoff = F.lit(_FOJ_CUTOFF).cast("timestamp")
     clicks = (
@@ -309,14 +298,12 @@ def run_full_outer_join(
             "micros_after_click"
         ),
     )
-    q = (
+    _run_stream(
+        spark,
         joined.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -348,7 +335,6 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result silently diverges from the batch twin).  The availableNow
     run equals the batch full-outer interval join exactly (full hash
     gate), trailing NULLs flushed by the no-data microbatch."""
-    tune(spark)
     return run_full_outer_join(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -393,7 +379,6 @@ def run_asof_join(
     partial aggregation collapses candidates as they arrive), keyed and
     evicted by window.  This is the streaming twin of the batch
     events_asof_join (B13), which uses a window-function last-value plan."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     clicks = (
         _events_stream(spark, path, **source_options)
@@ -454,14 +439,12 @@ def run_asof_join(
             ).alias("micros_since_click"),
         )
     )
-    q = (
+    _run_stream(
+        spark,
         asof.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -497,7 +480,6 @@ def streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator Spark lacks natively, composed as interval-join -> windowed
     argmax (two chained stateful operators); availableNow result equals
     the batch as-of join exactly.  See run_asof_join."""
-    tune(spark)
     return run_asof_join(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -553,7 +535,6 @@ def run_transition_matrix(
     to the applyInPandasWithState lag (linear, one event of state per
     user — D2's Python-state tradeoff: ~2x slower per row than JVM
     state, no batch-plan reuse)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     prevs = (
         _events_stream(spark, path, **source_options)
@@ -608,14 +589,12 @@ def run_transition_matrix(
             "n",
         )
     )
-    q = (
+    _run_stream(
+        spark,
         matrix.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -660,7 +639,6 @@ def streaming_transition_matrix_interval_join(
     workers in the hot path) for feeds known to sit at or below
     ``D18_MAX_EVENTS_PER_USER_IN_HORIZON`` — route by density via
     ``pick_transition_matrix_impl``."""
-    tune(spark)
     return run_transition_matrix(
         spark, os.path.join(sf_dir, "events.parquet")
     )
@@ -768,17 +746,14 @@ def run_transition_matrix_state(
     The sink holds per-transition rows; the matrix rollup is the
     downstream aggregation (at deploy: a sink table + a batch/continuous
     rollup — or chain a windowed count after the stateful op)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     trans = transition_state_stream(spark, path, **source_options)
-    q = (
+    _run_stream(
+        spark,
         trans.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return (
         spark.table(sink)
         .groupBy("day", "prev_type", "next_type")
@@ -816,7 +791,6 @@ def streaming_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE_r08.json); also needs no event-time cutoff (covers the full
     feed).  See run_transition_matrix_state and
     ``pick_transition_matrix_impl`` for the density routing rule."""
-    tune(spark)
     return run_transition_matrix_state(
         spark, os.path.join(sf_dir, "events.parquet")
     )

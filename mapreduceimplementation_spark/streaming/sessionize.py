@@ -40,11 +40,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window as PsWindow
 
 from mapreduceimplementation_spark.registry import ORACLES, register
-from mapreduceimplementation_spark.session import tune
 from mapreduceimplementation_spark.functions.stable import dsum
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _size_stream_state,
+    _run_stream,
     _stop_query,
 )
 
@@ -123,7 +122,6 @@ def run_sessionize_stream(
 ) -> DataFrame:
     """Run the stateful sessionize stream over `path` to completion and
     return the reconciled session table (see module docstring)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "ts", "event_id", "value"
@@ -139,14 +137,12 @@ def run_sessionize_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
+    _run_stream(
+        spark,
         sessions.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     # reconciliation: a session re-emitted by a later batch supersedes its
     # provisional row (same key, strictly larger n_events)
     mem = spark.table(sink)
@@ -166,7 +162,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     B8's oracle — the full rows+schema+hash gate, not a weaker rows-only
     check.  Multi-batch state carry-over is exercised separately by
     tests/test_streaming.py with maxFilesPerTrigger=1."""
-    tune(spark)
     return run_sessionize_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -205,7 +200,6 @@ def streaming_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     across microbatches and the sink holds every finalized session at
     end-of-input — no watermark-stranded trailing sessions, no
     provisional-row reconciliation (D2's trade)."""
-    tune(spark)
     return run_sessionize_native_stream(
         spark, os.path.join(sf_dir, "events.parquet")
     )
@@ -216,7 +210,6 @@ def run_sessionize_native_stream(
 ) -> DataFrame:
     """Run the session_window stream over `path` to completion and return
     the B8-shaped session table (see streaming_sessionize_native)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "ts", "value"
@@ -229,14 +222,12 @@ def run_sessionize_native_stream(
             dsum("value").alias("total_value"),
         )
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     mem = spark.table(sink)
     w = PsWindow.partitionBy("user_id").orderBy("win.start")
     return mem.select(
@@ -308,7 +299,6 @@ def run_funnel_stream(
     at most 3·|users| rows and the rollup is sink-sized.  Cross-batch:
     a view in batch 1 must gate a click in batch 3 — the multibatch
     pytest pins it."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
@@ -322,14 +312,12 @@ def run_funnel_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    _run_stream(
+        spark,
         stages.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     counts = (
         spark.table(sink)
         .groupBy("stage")
@@ -350,7 +338,6 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once at completion — shares B23's oracle verbatim (full
     rows+schema+hash gate), the D2 borrowed-oracle discipline.  See
     run_funnel_stream."""
-    tune(spark)
     # B23's oracle must be registered before we borrow it (import above)
     return run_funnel_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
@@ -409,7 +396,6 @@ def run_retention_stream(
     sink holds one row per (user, active day) — the same cardinality
     B24's per-user day-dedup shuffles — and the retention matrix is the
     sink-sized rollup."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
@@ -423,14 +409,12 @@ def run_retention_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    _run_stream(
+        spark,
         pairs.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     return (
         spark.table(sink)
         .groupBy(
@@ -448,7 +432,6 @@ def streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     day set unnecessary), one emission per (user, active day); shares
     B24's oracle verbatim (full rows+schema+hash gate).  See
     run_retention_stream."""
-    tune(spark)
     return run_retention_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -527,7 +510,6 @@ def run_scd2_stream(
     the winner is unique and deterministic — no emission sequence column
     needed.  Sink size is runs + touched-versions-per-batch, dimension-
     sized, never event-volume-sized."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
@@ -541,14 +523,12 @@ def run_scd2_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    _run_stream(
+        spark,
         log.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
     )
-    q.awaitTermination()
     pick = PsWindow.partitionBy("user_id", "version").orderBy(
         F.col("valid_to").isNull().asc(), F.col("n_events").desc()
     )
@@ -574,7 +554,6 @@ def streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (D22): O(1) per-user GroupState (the open run only), changelog-upsert
     emission compacted deterministically by the reader; shares B69's
     oracle verbatim (full rows+schema+hash gate).  See run_scd2_stream."""
-    tune(spark)
     return run_scd2_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
 
@@ -658,7 +637,6 @@ def run_session_paths_stream(
     n_events — unique by the D22 argument) yields the session table, and
     the report is its bounded rollup mirroring B77's exact frontier
     (n_sessions DESC, path; integer-ppm share)."""
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
@@ -672,14 +650,12 @@ def run_session_paths_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    _run_stream(
+        spark,
         log.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
     )
-    q.awaitTermination()
     pick = PsWindow.partitionBy("user_id", "session_seq").orderBy(
         F.col("closed").desc(), F.col("n_events").desc()
     )
@@ -715,7 +691,6 @@ def streaming_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     path exactly once, open-session snapshots ride the D22 changelog +
     compaction discipline; shares B77's oracle verbatim.  See
     run_session_paths_stream."""
-    tune(spark)
     return run_session_paths_stream(
         spark, os.path.join(sf_dir, "events.parquet")
     )

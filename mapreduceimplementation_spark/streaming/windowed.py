@@ -16,15 +16,15 @@ across microbatch boundaries and cluster sizes.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduceimplementation_spark.functions.stable import dsum, sql_dsum
 from mapreduceimplementation_spark.registry import register
-from mapreduceimplementation_spark.session import tune
+from mapreduceimplementation_spark.session import scoped_conf
 
 _SINK = "d1_windowed_counts_sink"
 
@@ -35,27 +35,28 @@ def _stop_query(spark: SparkSession, name: str) -> None:
             q.stop()
 
 
-def _size_stream_state(spark: SparkSession, cap: int = 8) -> None:
-    """Cap shuffle partitions for a streaming query.
+def _run_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    *,
+    skip_no_data_batch: bool = False,
+) -> None:
+    """Drive ``writer`` to completion with ``trigger(availableNow)``.  Its
+    confs are a ``scoped_conf`` held from ``.start()`` to
+    ``awaitTermination()``, so the session is back as it was afterwards.
 
-    Every stateful streaming partition owns state-store instances (a
-    stream-stream join keeps FOUR per partition) with per-commit file
-    overhead, so partition count should track stateful-key volume, not
-    scan width — 32 batch partitions means 128 join state stores doing
-    tiny commits.  Batch queries re-tune() to the full width on entry, so
-    the cap never leaks past the streaming op."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(cur, cap)))
+    Shuffle partitions are capped at 8: every stateful streaming
+    partition owns state-store instances (a stream-stream join keeps
+    FOUR per partition) with per-commit file overhead, so partition
+    count should track stateful-key volume, not scan width — 32 batch
+    partitions means 128 join state stores doing tiny commits.
 
-
-@contextmanager
-def _skip_no_data_batch(spark: SparkSession):
-    """Skip the trailing no-data microbatch for streams where it is
-    provably a no-op on the RESULT (guide §1.2: don't compute things you
-    throw away).  When a watermark advances at end-of-input, availableNow
-    runs one extra empty microbatch whose only effects are state EVICTION
-    and watermark-forced EMISSION; measured at 0.3-4 s per stream (r11
-    stream_profile), it is pure machinery for:
+    ``skip_no_data_batch`` skips the trailing no-data microbatch, for
+    streams where it is provably a no-op on the RESULT (guide §1.2:
+    don't compute things you throw away).  When a watermark advances at
+    end-of-input, availableNow runs one extra empty microbatch whose only
+    effects are state EVICTION and watermark-forced EMISSION; measured
+    at 0.3-4 s per stream (r11 stream_profile), it is pure machinery for:
 
     - INNER stream-stream joins (matches emit eagerly in data batches;
       eviction emits nothing),
@@ -69,14 +70,14 @@ def _skip_no_data_batch(spark: SparkSession):
     finalization) and for timeout-based stateful ops.  Scale note: this
     is a per-query semantic property, not a local[32] tuning — on a real
     cluster the skipped batch costs a full state-store scan + commit per
-    partition."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    partition.  Both confs are session-wide while the stream runs, so no
+    other stream may start meanwhile (queries here run one at a time)."""
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf = {"spark.sql.shuffle.partitions": str(min(cur, 8))}
+    if skip_no_data_batch:
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_conf(spark, conf):
+        writer.trigger(availableNow=True).start().awaitTermination()
 
 
 #: per-path schema cache — the probe read lists and foots the file; doing
@@ -86,14 +87,8 @@ _SCHEMA_CACHE: dict[str, object] = {}
 
 def _events_stream(spark: SparkSession, path: str, **options) -> DataFrame:
     """events as a file stream with the same nanos→micros ts handling as
-    the batch loader (sources/tables.py load_table).
-
-    nanosAsLong is a session-wide conf (same one load_table sets, and it
-    must stay set while the stream executes, so it is deliberately not
-    restored): every parquet read of this testdata needs it, and all of
-    this repo's reads go through load_table/_events_stream which handle
-    the long→timestamp fixup."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    the batch loader (sources/tables.py load_table); the nanosAsLong conf
+    that surfaces NANOS timestamps as long comes from session.tune."""
     if path not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[path] = spark.read.parquet(path).schema  # ts = long nanos
     schema = _SCHEMA_CACHE[path]
@@ -134,8 +129,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals the batch aggregation exactly — the correctness gate
     a streaming re-platform needs before switching traffic.
     """
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, _SINK)
     ev = _events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     agg = (
@@ -149,14 +142,12 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("win.start").alias("minute"), "event_type", "n_events", "total_value"
         )
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(_SINK)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(_SINK)
 
 
@@ -195,8 +186,6 @@ def streaming_windowed_counts_json(spark: SparkSession, sf_dir: str) -> DataFram
         materialize_events_jsonl,
     )
 
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, _JSON_SINK)
     d = materialize_events_jsonl(sf_dir)
     ev = (
@@ -217,14 +206,12 @@ def streaming_windowed_counts_json(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("win.start").alias("minute"), "event_type", "n_events", "total_value"
         )
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(_JSON_SINK)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(_JSON_SINK)
 
 
@@ -261,8 +248,6 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete mode + availableNow ⇒ equals the batch top-k exactly
     (ties broken by event_type: a total order, so the frontier is
     deterministic across engines and partitionings)."""
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, _TOPK_SINK)
     ev = _events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     agg = (
@@ -271,14 +256,12 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("win.start").alias("minute"), "event_type", "n_events")
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(_TOPK_SINK)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("minute").orderBy(
@@ -397,8 +380,6 @@ def run_hll_register_stream(
         _SQL_HLL_RHO,
     )
 
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     h = hash64(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
@@ -415,14 +396,12 @@ def run_hll_register_stream(
         .agg(F.max("rho").alias("r"))
         .select(F.col("win.start").alias("day"), "bucket", "r")
     )
-    q = (
+    _run_stream(
+        spark,
         regs.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -533,8 +512,6 @@ def run_quantile_cell_stream(
     availableNow replay terminates."""
     from mapreduceimplementation_spark.plans.events import qs_bin
 
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     cells = (
@@ -546,14 +523,12 @@ def run_quantile_cell_stream(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("win.start").alias("day"), "event_type", "bin", "cnt")
     )
-    q = (
+    _run_stream(
+        spark,
         cells.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(sink)
 
 
@@ -622,8 +597,6 @@ def run_cms_cell_stream(
         cms_bucket,
     )
 
-    tune(spark)
-    _size_stream_state(spark)
     _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     cells = (
@@ -640,12 +613,10 @@ def run_cms_cell_stream(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("win.start").alias("day"), "d", "bucket", "cnt")
     )
-    q = (
+    _run_stream(
+        spark,
         cells.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.table(sink)

@@ -705,3 +705,25 @@ def test_mh_sigs_arrow_kernel_matches_expression(spark, sf_dir):
     )
     want = expr.toPandas().sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_dtype=True)
+
+
+def test_mh_kernel_skips_empty_batches():
+    """An empty record batch yields nothing (it used to fail in
+    ``lens.min()``); the batch after it is still processed."""
+    import pyarrow as pa
+
+    from mapreduceimplementation_spark.operators import dedup as dd
+
+    def batch(ids, hs):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, type=pa.int64()), pa.array(hs, type=pa.list_(pa.int64()))],
+            names=["doc_id", "hs"],
+        )
+
+    out = list(
+        dd._mh_perm_minima_batches(iter([batch([], []), batch([7], [[3, 5]])]))
+    )
+    assert len(out) == 1
+    assert out[0].num_rows == 1
+    assert out[0].column(0).to_pylist() == [7]
+    assert out[0].num_columns == 1 + dd._MH_K

@@ -45,9 +45,10 @@ def test_output_independent_of_shuffle_partitioning(
 ):
     from mapreduceimplementation_spark import session
 
-    # every query entry point calls tune(), which applies _RUNTIME_CONF —
-    # patching the dict varies the partitioning through the query's own
-    # config path (tune would overwrite a bare spark.conf.set)
+    # register applies tune() on entry to every query, and tune applies
+    # _RUNTIME_CONF — patching the dict varies the partitioning through
+    # the query's own config path (tune would overwrite a bare
+    # spark.conf.set)
     key = "spark.sql.shuffle.partitions"
     monkeypatch.setitem(session._RUNTIME_CONF, key, "8")
     a = _rows(eng.QUERIES[name](spark, sf_dir))

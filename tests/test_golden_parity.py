@@ -1,10 +1,19 @@
-"""Golden-output parity against the reference's OWN committed test data:
-run our operators over the reference's pg-*.txt corpus and compare with
-the mr-out-* files its MapReduce run produced (the reference's
-test-mr.sh gate: 'wc output equals sequential golden').
+"""Golden-output parity with the reference MapReduce lab: run our
+operators over a pg-*.txt corpus and compare with the mr-out-* files of
+a MapReduce run over it (the reference's test-mr.sh gate: 'wc output
+equals sequential golden').
+
+Two corpora share the reference's layout (pg-*.txt inputs, mr-out-N
+golden lines).  ``tests/data/wc`` is a small hand-written one, always
+present: its mr-out-0 was derived by hand from wc.go's rule (split on
+!unicode.IsLetter, count per case-sensitive word, keys sorted), and it
+covers non-ASCII letters, digits, apostrophes and punctuation.  The
+reference's own corpus and committed intermediates are an optional
+extra, tested when a checkout of the lab is present.
 
 Reference anchors: src/mrapps/wc.go (Map splits on !unicode.IsLetter,
-Reduce counts), src/mr/worker.go (mr-out-N '%v %v' sink contract).
+Reduce counts), src/mr/worker.go (mr-out-N '%v %v' sink contract,
+ihash = FNV-1a 32-bit & 0x7fffffff).
 """
 
 from __future__ import annotations
@@ -17,16 +26,36 @@ from pyspark.sql import functions as F
 
 from mapreduceimplementation_spark.sources.text import read_text_dir, write_mr_out
 
+_FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "wc")
 _REF_MAIN = "/root/reference/src/main"
 _HAVE_REF = bool(glob.glob(os.path.join(_REF_MAIN, "pg-*.txt"))) and bool(
     glob.glob(os.path.join(_REF_MAIN, "mr-out-[0-9]"))
 )
+_CORPORA = [
+    pytest.param(_FIXTURE, id="fixture"),
+    pytest.param(
+        _REF_MAIN,
+        id="reference",
+        marks=pytest.mark.skipif(
+            not _HAVE_REF, reason="reference corpus/golden not present"
+        ),
+    ),
+]
 
 
-def _golden_counts() -> dict[str, int]:
+def _wc_map(docs, out: str):
+    """wc.go's Map: one row per maximal run of Unicode letters.  (The
+    package's word_tokens splits on ASCII letters only, which matches
+    wc.go on ASCII text but not on the fixture's accented words.)"""
+    return docs.select(
+        F.explode(F.split("text", r"[^\p{L}]+")).alias(out)
+    ).where(F.col(out) != "")
+
+
+def _golden_counts(corpus: str = _REF_MAIN) -> dict[str, int]:
     out: dict[str, int] = {}
-    for fn in glob.glob(os.path.join(_REF_MAIN, "mr-out-[0-9]")):
-        with open(fn) as f:
+    for fn in glob.glob(os.path.join(corpus, "mr-out-[0-9]")):
+        with open(fn, encoding="utf-8") as f:
             for line in f:
                 line = line.rstrip("\n")
                 if not line:
@@ -37,37 +66,35 @@ def _golden_counts() -> dict[str, int]:
     return out
 
 
-@pytest.mark.skipif(not _HAVE_REF, reason="reference corpus/golden not present")
-def test_wordcount_matches_reference_golden(spark):
-    """wc.go parity on the reference's own corpus: split contents on
-    !unicode.IsLetter ([^\\p{L}]+), count per word (case-sensitive), and
-    the (word, count) set must equal the union of the committed
-    mr-out-0..9 files exactly."""
-    docs = read_text_dir(spark, os.path.join(_REF_MAIN, "pg-*.txt"))
-    counts = (
-        docs.select(F.explode(F.split("text", r"[^\p{L}]+")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .count()
-    )
+def test_fixture_golden_is_nonempty():
+    """The always-on corpus really is there, so its tests cannot pass
+    vacuously."""
+    assert len(glob.glob(os.path.join(_FIXTURE, "pg-*.txt"))) == 3
+    assert len(_golden_counts(_FIXTURE)) == 60
+
+
+@pytest.mark.parametrize("corpus", _CORPORA)
+def test_wordcount_matches_reference_golden(spark, corpus):
+    """wc.go parity: split contents on !unicode.IsLetter ([^\\p{L}]+),
+    count per word (case-sensitive), and the (word, count) set must
+    equal the union of the mr-out-N golden files exactly."""
+    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    counts = _wc_map(docs, "word").groupBy("word").count()
     ours = {(r["word"], r["count"]) for r in counts.collect()}
-    golden = set(_golden_counts().items())
+    golden = set(_golden_counts(corpus).items())
     assert ours == golden, (
         f"missing={list(golden - ours)[:5]} extra={list(ours - golden)[:5]}"
     )
 
 
-@pytest.mark.skipif(not _HAVE_REF, reason="reference corpus/golden not present")
-def test_mr_out_sink_contract(spark, tmp_path):
+@pytest.mark.parametrize("corpus", _CORPORA)
+def test_mr_out_sink_contract(spark, tmp_path, corpus):
     """write_mr_out produces exactly n_reduce part files whose union of
     'key value' lines equals the input, each file sorted by key
     (worker.go's mr-out-N contract)."""
-    docs = read_text_dir(spark, os.path.join(_REF_MAIN, "pg-*.txt"))
-    counts = (
-        docs.select(F.explode(F.split("text", r"[^\p{L}]+")).alias("key"))
-        .where(F.col("key") != "")
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("value"))
+    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    counts = _wc_map(docs, "key").groupBy("key").agg(
+        F.count(F.lit(1)).alias("value")
     )
     out = str(tmp_path / "mr-out")
     write_mr_out(counts, out, n_reduce=10)
@@ -76,14 +103,31 @@ def test_mr_out_sink_contract(spark, tmp_path):
     assert len(parts) == 10
     seen: dict[str, int] = {}
     for fn in parts:
-        with open(fn) as f:
+        with open(fn, encoding="utf-8") as f:
             keys = []
             for line in f:
                 word, cnt = line.rstrip("\n").rsplit(" ", 1)
                 keys.append(word)
                 seen[word] = int(cnt)
             assert keys == sorted(keys), f"{fn} not sorted by key"
-    assert seen == _golden_counts()
+    assert seen == _golden_counts(corpus)
+
+
+# ---------------------------------------------------------------------------
+# ihash: FNV-1a 32-bit, checked against the algorithm's published test
+# vectors (the FNV reference test suite), on the driver and in SQL
+
+_FNV1A32_VECTORS = [("", 0x811C9DC5), ("a", 0xE40C292C), ("foobar", 0xBF9CF968)]
+
+
+def test_fnv1a32_published_vectors(spark):
+    from mapreduceimplementation_spark.functions.hashing import fnv1a32, py_fnv1a32
+
+    for s, want in _FNV1A32_VECTORS:
+        assert py_fnv1a32(s) == want, s
+    df = spark.createDataFrame(_FNV1A32_VECTORS, "s string, want long")
+    got = {r["s"]: r["h"] for r in df.select("s", fnv1a32("s").alias("h")).collect()}
+    assert got == dict(_FNV1A32_VECTORS)
 
 
 # ---------------------------------------------------------------------------
@@ -105,7 +149,7 @@ def _intermediate_rows():
     for fn in sorted(glob.glob(os.path.join(_REF_MAIN, "mr-out-*-*.json"))):
         base = os.path.basename(fn)[len("mr-out-"):-len(".json")]
         m, r = (int(x) for x in base.split("-"))
-        with open(fn) as f:
+        with open(fn, encoding="utf-8") as f:
             for line in f:
                 line = line.strip()
                 if not line:
@@ -165,8 +209,8 @@ def test_reduce_over_intermediates_equals_golden():
     assert dict(counts) == _golden_counts()
 
 
-@pytest.mark.skipif(not _HAVE_REF, reason="reference corpus not present")
-def test_write_mr_intermediate_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("corpus", _CORPORA)
+def test_write_mr_intermediate_roundtrip(spark, tmp_path, corpus):
     """Write-side dual of A10: our map output written through
     write_mr_intermediate lands every key in the reference's ihash
     bucket (so a reference reducer could consume it), and replaying
@@ -174,16 +218,10 @@ def test_write_mr_intermediate_roundtrip(spark, tmp_path):
     import json as _json
 
     from mapreduceimplementation_spark.functions.hashing import py_fnv1a32
-    from mapreduceimplementation_spark.functions.text import word_tokens
-    from mapreduceimplementation_spark.sources.text import (
-        read_text_dir,
-        write_mr_intermediate,
-    )
+    from mapreduceimplementation_spark.sources.text import write_mr_intermediate
 
-    docs = read_text_dir(spark, os.path.join(_REF_MAIN, "pg-*.txt"))
-    kv = word_tokens(docs).select(
-        F.col("word").alias("key"), F.lit("1").alias("value")
-    )
+    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    kv = _wc_map(docs, "key").select("key", F.lit("1").alias("value"))
     out = str(tmp_path / "intermediate")
     write_mr_intermediate(kv, out, n_reduce=10)
 
@@ -192,7 +230,7 @@ def test_write_mr_intermediate_roundtrip(spark, tmp_path):
     counts: Counter = Counter()
     for fn in glob.glob(os.path.join(out, "r=*", "*.json")):
         r = int(os.path.basename(os.path.dirname(fn)).split("=")[1])
-        with open(fn) as f:
+        with open(fn, encoding="utf-8") as f:
             for line in f:
                 line = line.strip()
                 if not line:
@@ -202,4 +240,4 @@ def test_write_mr_intermediate_roundtrip(spark, tmp_path):
                 assert (py_fnv1a32(rec["Key"]) & 0x7FFFFFFF) % 10 == r
                 assert rec["Value"] == "1"
                 counts[rec["Key"]] += 1
-    assert dict(counts) == _golden_counts()
+    assert dict(counts) == _golden_counts(corpus)

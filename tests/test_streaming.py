@@ -354,7 +354,7 @@ def test_streaming_checkpoint_recovery(spark, sf_dir, tmp_path):
     from mapreduceimplementation_spark.functions.stable import dsum
     from mapreduceimplementation_spark.streaming.windowed import (
         _events_stream,
-        _size_stream_state,
+        _run_stream,
         _stop_query,
     )
 
@@ -366,7 +366,6 @@ def test_streaming_checkpoint_recovery(spark, sf_dir, tmp_path):
         shutil.copy2(os.path.join(src, p), feed / p)
     ckpt = str(tmp_path / "ckpt")
     sink = "d_ckpt_recovery_sink"
-    _size_stream_state(spark)
     _stop_query(spark, sink)
 
     def run_once():
@@ -385,15 +384,13 @@ def test_streaming_checkpoint_recovery(spark, sf_dir, tmp_path):
                 "total_value",
             )
         )
-        q = (
+        _run_stream(
+            spark,
             agg.writeStream.format("memory")
             .queryName(sink)
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
 
     run_once()  # run 1: first half, then the query is gone
     partial = spark.table(sink).count()
@@ -436,7 +433,7 @@ def test_append_mode_watermark_drops_late_data(spark, sf_dir, tmp_path):
 
     from mapreduceimplementation_spark.streaming.windowed import (
         _events_stream,
-        _size_stream_state,
+        _run_stream,
         _stop_query,
     )
 
@@ -473,7 +470,6 @@ def test_append_mode_watermark_drops_late_data(spark, sf_dir, tmp_path):
         [(3, "2024-01-01 09:00:20", 1, "view", 1.0)],
         1_000_200,
     )
-    _size_stream_state(spark)
     sink = "d_late_drop_sink"
     _stop_query(spark, sink)
     ev = _events_stream(spark, str(d), maxFilesPerTrigger="1")
@@ -483,14 +479,12 @@ def test_append_mode_watermark_drops_late_data(spark, sf_dir, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("win.start").alias("minute"), "n")
     )
-    q = (
+    _run_stream(
+        spark,
         agg.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("append")  # append emits only watermark-closed windows
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),  # append emits only watermark-closed windows
     )
-    q.awaitTermination()
     got = {
         (str(r["minute"]), r["n"]) for r in spark.table(sink).collect()
     }
@@ -522,7 +516,7 @@ def test_file_sink_exactly_once_across_restart(spark, sf_dir, tmp_path):
     from mapreduceimplementation_spark.functions.stable import dsum
     from mapreduceimplementation_spark.streaming.windowed import (
         _events_stream,
-        _size_stream_state,
+        _run_stream,
     )
 
     src = _split_events(spark, sf_dir, tmp_path, n_files=4)
@@ -533,7 +527,6 @@ def test_file_sink_exactly_once_across_restart(spark, sf_dir, tmp_path):
         shutil.copy2(os.path.join(src, p), feed / p)
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
-    _size_stream_state(spark)
 
     def run_once():
         ev = _events_stream(spark, str(feed), maxFilesPerTrigger="1")
@@ -551,15 +544,13 @@ def test_file_sink_exactly_once_across_restart(spark, sf_dir, tmp_path):
                 "total_value",
             )
         )
-        q = (
+        _run_stream(
+            spark,
             agg.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
 
     run_once()
     for p in parts[2:]:

@@ -827,8 +827,8 @@ def test_buckets_arrow_kernel_matches_expression(spark, sf_dir):
 
 
 def test_buckets_arrow_kernel_edge_rows(spark):
-    """Short vectors (len != _DIM) emit code 0 for every table — the
-    exact null-fold semantics of the old expression; NaN dims keep the
+    """Short and null vectors emit code 0 for every table — the exact
+    null-fold semantics of the old expression; NaN dims keep the
     Spark/DuckDB NaN-is-largest ordering (bit set)."""
     import math
 
@@ -839,6 +839,7 @@ def test_buckets_arrow_kernel_edge_rows(spark):
             (1, [0.5] * V._DIM),
             (2, [0.5] * 3),  # short: every bit nulls out -> code 0
             (3, [math.nan] * V._DIM),  # NaN dot: NaN >= 0 is true in Spark
+            (4, None),  # null vector: null dot -> code 0, like a short one
         ],
         "vec_id long, v array<double>",
     )
@@ -857,6 +858,26 @@ def test_buckets_arrow_kernel_edge_rows(spark):
     assert got.equals(want)
     assert list(got[got.vec_id == 2]["code"]) == [0, 0]
     assert list(got[got.vec_id == 3]["code"]) == [7, 7]
+    assert list(got[got.vec_id == 4]["code"]) == [0, 0]
+
+
+def test_buckets_kernel_null_vector_batch():
+    """Driven directly: a batch mixing a null vector with a full one."""
+    import pyarrow as pa
+
+    from mapreduceimplementation_spark.operators import vectors as V
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, 2], type=pa.int64()),
+            pa.array([None, [0.5] * V._DIM], type=pa.list_(pa.float64())),
+        ],
+        names=["vec_id", "v"],
+    )
+    (out,) = V._make_buckets_kernel("knn", 2, 3)(iter([batch]))
+    rows = out.to_pylist()
+    assert [r["vec_id"] for r in rows] == [1, 1, 2, 2]
+    assert [r["code"] for r in rows[:2]] == [0, 0]
 
 
 def test_pq_encode_kernel_matches_fold(spark, sf_dir):

@@ -65,7 +65,20 @@ def main() -> None:
             pass
 
         def onQueryTerminated(self, e):
-            events.append({"kind": "end", "t": time.time()})
+            events.append({"kind": "end", "t": time.time(), "id": str(e.id)})
+
+    def wait_terminated(timeout_s: float = 30.0) -> bool:
+        """Listener events arrive on an async bus: wait until every
+        started stream has reported termination (its progress events
+        come before that), or give up after ``timeout_s``."""
+        deadline = time.time() + timeout_s
+        while True:
+            seen = list(events)
+            started = {ev["id"] for ev in seen if ev["kind"] == "start"}
+            ended = {ev["id"] for ev in seen if ev["kind"] == "end"}
+            if started <= ended or time.time() >= deadline:
+                return started <= ended
+            time.sleep(0.02)
 
     spark.streams.addListener(_L())
     # parquet-footer + streaming-machinery warm-up, same as bench.py
@@ -73,6 +86,7 @@ def main() -> None:
     import bench
 
     bench.warm_streaming(spark)
+    wait_terminated()  # so the warm-up's late events miss the first query
 
     for name in names:
         if name not in qs:
@@ -87,8 +101,9 @@ def main() -> None:
             F.sum(F.crc32(F.encode(F.to_json(F.struct(*df.columns)), "UTF-8"))),
         ).collect()
         t1 = time.time()
-        # listener events arrive async; give the bus a beat
-        time.sleep(0.4)
+        if not wait_terminated():
+            print(f"## {name}: WARNING a stream never reported termination; "
+                  "the batch list below may be incomplete")
         print(f"## {name}: total {t1 - t0:.2f}s "
               f"(stream-drive {t_stream - t0:.2f}s, readout {t1 - t_stream:.2f}s)")
         for ev in list(events):
