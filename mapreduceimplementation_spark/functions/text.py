@@ -1,8 +1,9 @@
 """Tokenization / n-gram helpers — built-in functions only (codegen path).
 
-Word-splitting semantics follow the reference word-count app: words are
-maximal runs of ASCII letters, everything else is a separator, case is
-preserved (reference: src/mrapps/wc.go Map()).
+Word-splitting follows the reference word-count app on ASCII text: words
+are maximal runs of ASCII letters, everything else is a separator, case is
+preserved (reference: src/mrapps/wc.go Map(), which splits on any
+non-letter, so the two differ only on non-ASCII letters).
 """
 
 from __future__ import annotations
@@ -15,14 +16,16 @@ WORD_SEP_RE = "[^A-Za-z]+"
 
 
 def word_tokens(df: DataFrame, text_col: str = "text", out: str = "word") -> DataFrame:
-    """One row per word occurrence (reference wc.go Map semantics)."""
+    """One row per word occurrence: maximal runs of ASCII letters.  This
+    is wc.go's Map on ASCII text; a non-ASCII letter splits a word here,
+    where wc.go (``!unicode.IsLetter``) keeps it whole."""
     return df.select(
         "*", F.explode(F.split(F.col(text_col), WORD_SEP_RE)).alias(out)
     ).where(F.col(out) != "")
 
 
 def word_array(col: Column | str) -> Column:
-    """Words of a text column as an array (wc.go token semantics)."""
+    """Words of a text column as an array (``word_tokens``'s rule)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(c, WORD_SEP_RE), lambda x: x != F.lit(""))
 

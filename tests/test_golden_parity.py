@@ -209,19 +209,43 @@ def test_reduce_over_intermediates_equals_golden():
     assert dict(counts) == _golden_counts()
 
 
-@pytest.mark.parametrize("corpus", _CORPORA)
-def test_write_mr_intermediate_roundtrip(spark, tmp_path, corpus):
+def _package_map(docs, out: str):
+    """The package's own Map, ``word_tokens``: runs of ASCII letters,
+    which is wc.go's Map on ASCII text such as the reference corpus."""
+    from mapreduceimplementation_spark.functions.text import word_tokens
+
+    return word_tokens(docs, out=out).select(out)
+
+
+@pytest.mark.parametrize(
+    "corpus, wc_map",
+    [
+        # the fixture's accented and Greek words need wc.go's Unicode rule
+        pytest.param(_FIXTURE, _wc_map, id="fixture"),
+        pytest.param(
+            _REF_MAIN,
+            _package_map,
+            id="reference",
+            marks=pytest.mark.skipif(
+                not _HAVE_REF, reason="reference corpus/golden not present"
+            ),
+        ),
+    ],
+)
+def test_write_mr_intermediate_roundtrip(spark, tmp_path, corpus, wc_map):
     """Write-side dual of A10: our map output written through
     write_mr_intermediate lands every key in the reference's ihash
     bucket (so a reference reducer could consume it), and replaying
-    Reduce over our files equals the committed golden counts."""
+    Reduce over our files equals the committed golden counts.  On the
+    reference corpus the map is the package's ``word_tokens``, so this
+    also pins the package tokenizer to wc.go's golden output."""
     import json as _json
 
     from mapreduceimplementation_spark.functions.hashing import py_fnv1a32
     from mapreduceimplementation_spark.sources.text import write_mr_intermediate
 
     docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
-    kv = _wc_map(docs, "key").select("key", F.lit("1").alias("value"))
+    kv = wc_map(docs, "key").select("key", F.lit("1").alias("value"))
     out = str(tmp_path / "intermediate")
     write_mr_intermediate(kv, out, n_reduce=10)
 
