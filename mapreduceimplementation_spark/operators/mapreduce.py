@@ -9,8 +9,11 @@ this module supplies the same *programming contract* on top of Arrow-batched
 DataFrame primitives:
 
 - map phase:    ``mapInPandas``  (vectorized, no per-row Python overhead)
-- shuffle:      ``groupBy(key)`` hash exchange == mr's ihash(key) % nReduce
-- reduce phase: ``applyInPandas`` (one call per key-group partition slice)
+- shuffle:      ``groupBy(key)`` hash exchange == mr's ihash(key) % nReduce,
+                gathering each key's values with ``collect_list``
+- reduce phase: ``mapInArrow`` over whole (key, values) batches, calling
+                ``reduce_fn`` once per row — the reduce worker's in-process
+                loop over its sorted keys (src/mr/worker.go)
 
 Python functions only run where the user *wrote* Python — built-in apps
 (word count, inverted index) have native codegen plans in ``mrcore.py``;
@@ -19,9 +22,11 @@ tests assert both paths agree (the reference's test-mr.sh golden check).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,6 +98,25 @@ def map_stage(
     return src.mapInPandas(_map_batches, schema=_KV_SCHEMA)
 
 
+def _reduce_batches(
+    reduce_fn: ReduceFn, batches: Iterator[pa.RecordBatch]
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel of the reduce phase: each (key, values) row of a
+    batch becomes (key, reduce_fn(key, values)).  The key column passes
+    through as it came (a null key reaches ``reduce_fn`` as None), and the
+    value column takes the key column's Arrow type, since Spark may hand
+    strings as either ``string`` or ``large_string``."""
+    for batch in batches:
+        keys = batch.column(0)
+        out = [
+            reduce_fn(k, vs)
+            for k, vs in zip(keys.to_pylist(), batch.column(1).to_pylist())
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [keys, pa.array(out, type=keys.type)], names=["key", "value"]
+        )
+
+
 def map_reduce(
     df: DataFrame,
     map_fn: MapFn,
@@ -106,7 +130,14 @@ def map_reduce(
 
     ``map_fn(key, value)`` yields (k, v) string pairs; ``reduce_fn(k, [v...])``
     returns the output string for k — the exact signatures of the reference's
-    plugin apps (src/mrapps/wc.go: Map/Reduce).
+    plugin apps (src/mrapps/wc.go: Map/Reduce).  ``reduce_fn`` runs exactly
+    once per distinct key.
+
+    Memory: a key's whole value list is held as one array (in the
+    aggregation buffer and in the reduce batch), the same per-key bound the
+    per-group pandas frame had.  Values reach ``reduce_fn`` in no guaranteed
+    order, as in the reference, and a null value emitted by ``map_fn`` is
+    dropped by ``collect_list`` (the contract emits strings).
 
     ``combine_fn``, if given, must be associative/commutative and its output
     must be acceptable as a ``reduce_fn`` input value (the MapReduce-paper
@@ -117,12 +148,11 @@ def map_reduce(
     if n_reduce is not None:
         # honor the reference's explicit nReduce partitioning request
         mapped = mapped.repartition(n_reduce, "key")
-
-    def _reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [k], "value": [reduce_fn(k, list(pdf["value"]))]})
-
-    return mapped.groupBy("key").applyInPandas(_reduce_group, schema=_KV_SCHEMA)
+    return (
+        mapped.groupBy("key")
+        .agg(F.collect_list("value").alias("values"))
+        .mapInArrow(functools.partial(_reduce_batches, reduce_fn), _KV_SCHEMA)
+    )
 
 
 # ---------------------------------------------------------------------------

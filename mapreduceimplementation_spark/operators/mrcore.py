@@ -70,7 +70,7 @@ def mr_wordcount_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the SAME SQL as mr_wordcount — files and parquet must agree
     word-for-word, the reference's golden-output check."""
     corpus = materialize_text_corpus(sf_dir)
-    docs = read_text_dir(spark, corpus + "/*.txt")
+    docs = read_text_dir(spark, corpus)
     return word_tokens(docs).groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 

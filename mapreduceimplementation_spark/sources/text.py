@@ -14,12 +14,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_text_dir(spark: SparkSession, path_glob: str) -> DataFrame:
-    """(doc_id=file path, text=file contents) rows for a glob of text files."""
+def read_text_dir(
+    spark: SparkSession, directory: str, pattern: str = "*.txt"
+) -> DataFrame:
+    """(doc_id=file path, text=file contents) rows, one per file in
+    ``directory`` whose name matches ``pattern``.
+
+    Spark is handed the one directory (listed on the driver) and the
+    pattern as a file-name filter, not a glob: a glob that expands to more
+    than 32 paths (``parallelPartitionDiscovery.threshold``) makes Spark
+    start a file-listing job while the DataFrame is built, and on every
+    call also logs a ``FileStreamSink`` WARN with a
+    ``FileNotFoundException`` stack trace while checking the glob for a
+    streaming sink log.  Hidden files (``_SUCCESS``, ``.crc``) never match."""
     return (
         spark.read.format("text")
         .option("wholetext", "true")
-        .load(path_glob)
+        .option("pathGlobFilter", pattern)
+        .load(directory)
         .select(
             F.input_file_name().alias("doc_id"),
             F.col("value").alias("text"),

@@ -78,7 +78,7 @@ def test_wordcount_matches_reference_golden(spark, corpus):
     """wc.go parity: split contents on !unicode.IsLetter ([^\\p{L}]+),
     count per word (case-sensitive), and the (word, count) set must
     equal the union of the mr-out-N golden files exactly."""
-    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    docs = read_text_dir(spark, corpus, "pg-*.txt")
     counts = _wc_map(docs, "word").groupBy("word").count()
     ours = {(r["word"], r["count"]) for r in counts.collect()}
     golden = set(_golden_counts(corpus).items())
@@ -92,7 +92,7 @@ def test_mr_out_sink_contract(spark, tmp_path, corpus):
     """write_mr_out produces exactly n_reduce part files whose union of
     'key value' lines equals the input, each file sorted by key
     (worker.go's mr-out-N contract)."""
-    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    docs = read_text_dir(spark, corpus, "pg-*.txt")
     counts = _wc_map(docs, "key").groupBy("key").agg(
         F.count(F.lit(1)).alias("value")
     )
@@ -244,7 +244,7 @@ def test_write_mr_intermediate_roundtrip(spark, tmp_path, corpus, wc_map):
     from mapreduceimplementation_spark.functions.hashing import py_fnv1a32
     from mapreduceimplementation_spark.sources.text import write_mr_intermediate
 
-    docs = read_text_dir(spark, os.path.join(corpus, "pg-*.txt"))
+    docs = read_text_dir(spark, corpus, "pg-*.txt")
     kv = wc_map(docs, "key").select("key", F.lit("1").alias("value"))
     out = str(tmp_path / "intermediate")
     write_mr_intermediate(kv, out, n_reduce=10)
