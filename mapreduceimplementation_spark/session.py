@@ -8,9 +8,10 @@ This is the only module that writes session confs.  ``registry.register``
 applies ``tune()`` once on entry to every query, so a session built
 elsewhere gets the same confs as one from ``get_spark``.  Anything
 that needs a different value for part of a query (the streaming
-shuffle-partition cap, the no-data-batch skip, a sink's timestamp
-encoding) takes it through ``scoped_conf``, which puts the session back
-exactly as it found it — no query leaves state behind for the next one.
+shuffle-partition cap, no-data-batch skip and checkpoint file manager,
+a sink's timestamp encoding) takes it through ``scoped_conf``, which
+puts the session back exactly as it found it — no query leaves state
+behind for the next one.
 """
 
 from __future__ import annotations

@@ -70,10 +70,31 @@ def _run_stream(
     finalization) and for timeout-based stateful ops.  Scale note: this
     is a per-query semantic property, not a local[32] tuning — on a real
     cluster the skipped batch costs a full state-store scan + commit per
-    partition.  Both confs are session-wide while the stream runs, so no
-    other stream may start meanwhile (queries here run one at a time)."""
+    partition.  Its confs are session-wide while the stream runs, so no
+    other stream may start meanwhile (queries here run one at a time).
+
+    Checkpoints (offset/commit/source logs, state-store deltas, schema
+    files) are written through the Hadoop FileSystem API, not Spark's
+    default FileContext manager.  Without the native libhadoop,
+    ``RawLocalFileSystem`` forks ``chmod`` for every file it creates,
+    and FileContext adds a ``readlink`` fork for every link-status call
+    on create and rename; each fork costs about 4 ms, several per
+    checkpoint file.  The FileSystem API asks no link status, and Spark
+    still wraps it in its checksum manager (``.crc`` and ``N.delta.crc``
+    files are unchanged).  This rests on every checkpoint being on the
+    driver's local filesystem (Spark's temporary checkpoint or a
+    caller's local ``checkpointLocation``), where both APIs end in the
+    same atomic POSIX rename.  On HDFS, ``FileSystem.rename`` does not
+    overwrite an existing target, so revisit this choice before a
+    checkpoint leaves the driver's disk."""
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    conf = {"spark.sql.shuffle.partitions": str(min(cur, 8))}
+    conf = {
+        "spark.sql.shuffle.partitions": str(min(cur, 8)),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+    }
     if skip_no_data_batch:
         conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     with scoped_conf(spark, conf):

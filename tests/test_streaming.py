@@ -419,6 +419,106 @@ def test_streaming_checkpoint_recovery(spark, sf_dir, tmp_path):
     assert partial < len(batch)
 
 
+def _windowed_count_writer(spark, path, sink, **options):
+    """A stateful windowed count over the events at ``path``, as a
+    complete-mode memory-sink writer (not started)."""
+    from pyspark.sql import functions as F
+
+    from mapreduceimplementation_spark.streaming.windowed import (
+        _events_stream,
+        _stop_query,
+    )
+
+    _stop_query(spark, sink)
+    agg = (
+        _events_stream(spark, path, **options)
+        .withWatermark("ts", "1 minute")
+        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return agg.writeStream.format("memory").queryName(sink).outputMode("complete")
+
+
+def test_stream_checkpoint_forks_no_readlink(spark, sf_dir, tmp_path):
+    """Checkpoint writes must not fork a process per link-status call.
+    Without the native libhadoop, Spark's default FileContext checkpoint
+    manager forks ``readlink`` on every checkpoint create and rename
+    (~4 ms each); the FileSystem-API manager never asks for link status.
+    Counted with an in-process JFR recording of ``jdk.ProcessStart``.
+    ``chmod`` is not asserted: the local filesystem forks one per created
+    file under either manager."""
+    from mapreduceimplementation_spark.streaming.windowed import _run_stream
+
+    writer = _windowed_count_writer(
+        spark, os.path.join(sf_dir, "events.parquet"), "d_fork_count_sink"
+    )
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        _run_stream(spark, writer)
+        rec.stop()
+        dump = jvm.java.io.File(str(tmp_path / "forks.jfr")).toPath()
+        rec.dump(dump)
+    finally:
+        rec.close()
+    commands = [
+        e.getString("command")
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    assert spark.table("d_fork_count_sink").count() > 0
+    readlinks = [c for c in commands if c.split()[0].endswith("readlink")]
+    assert not readlinks, f"{len(readlinks)} readlink forks, e.g. {readlinks[0]}"
+
+
+def test_stream_checkpoint_keeps_integrity_files(spark, sf_dir, tmp_path):
+    """Every checkpoint file the stream writes keeps its Hadoop ``.crc``
+    sibling, and every state ``N.delta`` also keeps Spark's own
+    ``N.delta.crc`` checksum file, so switching the checkpoint file
+    manager dropped no integrity file.  No rename temp file is left."""
+    import re
+
+    from mapreduceimplementation_spark.streaming.windowed import _run_stream
+
+    src = _split_events(spark, sf_dir, tmp_path, n_files=3)
+    ckpt = tmp_path / "ckpt"
+    _run_stream(
+        spark,
+        _windowed_count_writer(
+            spark, src, "d_ckpt_integrity_sink", maxFilesPerTrigger="1"
+        ).option("checkpointLocation", str(ckpt)),
+    )
+    files = {
+        p.relative_to(ckpt).as_posix() for p in ckpt.rglob("*") if p.is_file()
+    }
+    logged = [
+        f
+        for f in files
+        if re.fullmatch(r"(offsets|commits|sources/0)/\d+", f)
+        or f == "metadata"
+        or re.fullmatch(r"state/0/(\d+/_metadata/schema|_metadata/metadata)", f)
+    ]
+    deltas = [f for f in files if re.fullmatch(r"state/0/\d+/\d+\.delta", f)]
+    # three data batches, each with its offset, commit and source entry
+    for log in ("offsets", "commits", "sources/0"):
+        assert {f"{log}/{n}" for n in range(3)} <= files
+    assert deltas and any(f.endswith("/3.delta") for f in deltas)
+    assert {"metadata", "state/0/_metadata/metadata"} <= files
+    assert any(f.endswith("/_metadata/schema") for f in logged)
+
+    def crc(f):
+        head, _, name = f.rpartition("/")
+        return f"{head}/.{name}.crc" if head else f".{name}.crc"
+
+    for f in logged + deltas:
+        assert crc(f) in files, f
+    for f in deltas:
+        assert f + ".crc" in files, f
+        assert crc(f + ".crc") in files, f
+    assert not [f for f in files if "tmp" in f.rsplit("/", 1)[-1]]
+
+
 def test_append_mode_watermark_drops_late_data(spark, sf_dir, tmp_path):
     """Pin the watermark CONTRACT itself: in append mode a row arriving
     after its window's watermark expiry is dropped (by design — bounded

@@ -81,8 +81,9 @@ def main() -> None:
             time.sleep(0.02)
 
     spark.streams.addListener(_L())
-    # parquet-footer + streaming-machinery warm-up, same as bench.py
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
+    # parquet-footer + streaming-machinery warm-up; events.parquet is the
+    # one table every streaming query reads (benchmark inputs have no other)
+    spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
     import bench
 
     bench.warm_streaming(spark)
