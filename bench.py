@@ -1,42 +1,39 @@
-"""Headline benchmark: run flagship queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line.
+"""Headline benchmark: run the HEADLINE queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
+JSON line on stdout (progress and per-query timings go to stderr).
+
+One rule: after an untimed warm-up (a parquet footer read and one tiny
+stream, see warm_streaming), the suite runs REPS times in one session.
+Each query reports the median and the min of its REPS walls; ``value`` is
+the sum of the medians.  The min sits beside the median, never in its
+place: on a noisy host a minimum flatters.  The host is read against
+the ``mr_wordcount`` canary in the same run: ``host_factor_vs_quiet_canary``
+is its median over CANARY_QUIET, reported at sf0.1 only (the one scale the
+quiet figure was measured at).
 
 Each query is forced end-to-end by summing crc32(to_json(struct(*))) over
-every output row — all columns are materialized, so Catalyst cannot prune
-computed columns out of the timing (a plain count() would skip e.g.
-mr_grep.n_hits entirely).  Headline queries that are not registered are
-reported in the JSON's "skipped" list, never silently dropped.
+every output row, so Catalyst cannot prune computed columns out of the
+timing (a plain count() would skip e.g. mr_grep.n_hits entirely).
+Headline queries that are not registered are counted in ``n_skipped`` and
+named on stderr, never silently dropped.
 
-Auto-quiet protocol: same-code totals on this shared host ranged 38-129 s
-in a single day (BASELINE.md, variance note), so a single noisy window can
-make a round look 20% slower than it is (BENCH_r04.json went on record at
-canary 1.58).  The canary is mr_wordcount — untouched since round 1,
-1.58 s in the quiet reference window.  This script now re-runs the suite
-(up to MAX_PASSES) while the canary factor is >= QUIET_FACTOR, keeps the
-PER-QUERY MINIMUM across passes (the honest per-query estimate under
-asymmetric noise), and records how many passes it took plus whether the
-final window qualified as quiet.
-
-Window archiving (VERDICT r9 item 1): set SPARK_GRAFT_BENCH_ARCHIVE to a
-BENCH_LOCAL_r{N}.json path and every run appends itself as a first-class
-entry in the file's `windows` list, with the top-level `queries` rewritten
-as the CROSS-WINDOW per-query minima (the floors BASELINE.md rows cite) —
-so every cited window is committed and every cited floor is derivable
-from the one artifact.  tests/test_bench_ledger.py recomputes BASELINE.md's
-machine-checkable close-row claims through the same floors_of() function.
-
-Protocol and round-over-round numbers: BASELINE.md.
+The stdout line carries the totals and the ten slowest queries only, so it
+fits a 2000-character output tail whole.  For same-host A/B comparisons
+of a change, use the workload benchmark in perfbench/ (BENCHMARK.json).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Membership, and the family each untimed query is covered by:
+# BENCH_COVERAGE.md (tests/test_registry.py keeps the two in step).
 HEADLINE = [
     "mr_wordcount",
     "mr_inverted_index",
@@ -51,35 +48,19 @@ HEADLINE = [
     "corpus_prep",
     "streaming_windowed_counts",
     "streaming_stream_join",
-    # both sessionize streaming paths, timed side by side: the native
-    # session_window JVM-state path should beat the applyInPandasWithState
-    # Python-state path (BASELINE.md tracks the pair)
     "streaming_sessionize",
     "streaming_sessionize_native",
     "kmeans_embed",
-    # round-4 additions: semantic dedup (kmeans-blocked pair expansion),
-    # gram-repetition filters (two-exchange text shape), and the
-    # foreachBatch-upserted streaming materialized view
     "dedup_semantic",
     "quality_repetition",
     "streaming_incremental_rollup",
-    # late-round-4 family representatives: the widest TPC-H star join,
-    # the n-gram LM counting job, and kNN-graph triangle counting
     "q8_market_share",
     "corpus_ngram_lm_counts",
     "knn_triangles",
-    # round-5 additions: the decorrelated double-EXISTS (one fact
-    # exchange) and the per-key linearizability audit (3 window probes)
     "q21_waiting_suppliers",
     "kv_linearizability_audit",
-    # round-5 text-pipeline additions: the window-rewritten df shape
-    # (1 scan / 2 exchanges, no join) and the in-bucket source matrix
     "ngram_duplication",
     "boilerplate_source_matrix",
-    # round-6 widening: one representative per previously-untimed family
-    # (VERDICT r5 item 8) — the lock/view audit family, the LSH recall
-    # audit, the quantizer, the partsupp and dated TPC-H batches, the
-    # salted-join mitigation — plus the round-6 additions themselves
     "lock_grant_audit",
     "minhash_recall_audit",
     "embedding_quantize",
@@ -90,21 +71,13 @@ HEADLINE = [
     "raft_election_safety",
     "raft_log_matching",
     "streaming_full_outer_join",
-    # mid-round-6 sketch-audit family: HLL cardinality (batch + stream),
-    # the fixed-bin quantile sketch, the sketch-table merge audit
     "events_hll_users",
     "events_quantile_sketch",
     "streaming_hll_users",
     "events_hll_merge_audit",
-    # mid-round-6 join/sampling/dedup additions
     "events_incident_join",
     "corpus_sample_weighted",
     "dedup_prefix_filter",
-    # late-round-6 additions: duplicated-span accounting (two-window
-    # shape), incremental LSH dedup (band-broadcast join), BM25 retrieval
-    # (postings + broadcast probe join), the IVF recall audit, the
-    # snapshot-install audit (one-exchange array replay), and the two new
-    # streaming sketch twins
     "dedup_substring_spans",
     "dedup_incremental",
     "bm25_topk",
@@ -112,8 +85,6 @@ HEADLINE = [
     "raft_snapshot_audit",
     "streaming_quantile_sketch",
     "streaming_cms_topk",
-    # end-of-round-6 additions: the row-local winnowing + entropy scans,
-    # the broadcast-codebook PQ encoder, and the two-pipeline RRF fusion
     "winnowing_fingerprint",
     "corpus_entropy",
     "embedding_pq",
@@ -121,16 +92,12 @@ HEADLINE = [
     "ann_ivfpq",
     "streaming_asof_join",
     "events_scd2_dimension",
-    # round-6 continuation: the published-rule quality matrix (row-local
-    # scan floor) and the two-pass DSIR importance scorer
     "quality_gopher_rules",
     "dsir_importance",
     "quality_c4_rules",
     "embedding_hard_negatives",
     "embedding_matryoshka_eval",
     "events_funnel_attribution",
-    # previously-untimed round-6 families: the lake/KV maintenance trio
-    # and the two events matrices get recorded floors
     "kv_client_dedup",
     "table_merge_upsert",
     "table_snapshot_diff",
@@ -142,10 +109,6 @@ HEADLINE = [
     "tokenizer_fertility",
     "streaming_ab_test_metrics",
     "quality_ccnet_buckets",
-    # round-7 additions: the two trained models (fixed-point logistic
-    # classifier, BPE merge loop), the two new distributed-systems audits,
-    # the chained three-stateful-operator stream, and the composed
-    # end-to-end corpus pipeline
     "quality_classifier",
     "quality_classifier_eval",
     "bpe_train",
@@ -153,120 +116,48 @@ HEADLINE = [
     "shardkv_gc_audit",
     "raft_persistence_audit",
     "shardkv_availability_audit",
-    # r9 key swap (VERDICT r8 item 3): the plain key is now the LINEAR
-    # custom-state lag; the quadratic interval-join decomposition is the
-    # explicitly-named opt-in variant (still timed side by side)
     "streaming_transition_matrix",
     "streaming_transition_matrix_interval_join",
     "streaming_funnel",
     "streaming_retention",
     "corpus_e2e_pipeline",
-    # round-7 continuation: the four NEW perf shapes (positional postings
-    # join, bucket-grid KL fold, changelog-upsert stateful stream, global
-    # shuffle-shard window); the other four additions are family-covered
-    # (BENCH_COVERAGE.md)
     "phrase_search",
     "source_kl_divergence",
     "streaming_scd2",
     "corpus_shuffle_shards",
-    # round-7 widening: one representative per remaining untimed family
-    # (VERDICT r6 item 8; the family -> representative map and the
-    # justification for what stays untimed live in BENCH_COVERAGE.md)
-    # round-8 addition: the generic linearizability engine's lock-model
-    # instantiation — a NEW perf shape (state-matching joins + the
-    # O(log chain) pointer-doubling ancestor propagation)
     "lock_linearizability",
-    # round-9 addition: the engine's third model (shardctrler config
-    # epochs) — total consumption chain, the heaviest chain-rule load,
-    # timed beside the lock model so the r9 chain-router win is visible
     "ctrl_linearizability",
-    # round-8 widening (VERDICT r7 item 6): the rest of the r7 changelog
-    # streaming family gets recorded floors + 10x scale rows (D22
-    # streaming_scd2 was already timed; these complete D22-D25)
-    "streaming_anomaly",        # D23: stream-maintained daily cells + z-scores
-    "streaming_ewma",           # D24: O(K) per-type dyadic EWMA state
-    "streaming_session_paths",  # D25: open-session path state + compaction
-    "mr_distributed_sort",       # mr range-partition total sort
-    "mr_generic_wc",             # the Arrow-batched generic MR engine path
-    "q9_product_profit",         # widest TPC-H multi-join star
-    "q18_large_orders",          # semi-join-on-HAVING TPC-H shape
-    "q13_customer_distribution", # outer-join distribution TPC-H shape
-    "events_minutely",           # scan->agg floor of the minutely family
-    "events_retention",          # cohort self-join family
-    "events_exact_median",       # two-pass exact median family
-    "kv_apply_log",              # window log-replay fact shape
-    "shardkv_migration_diff",    # broadcast config-diff against fact state
-    "dedup_exact",               # hash-groupBy dedup floor
-    "dedup_simhash",             # chunked-hamming dedup family
-    "dedup_clusters",            # CC-iteration dedup family
-    "ann_ivf_kmeans",            # trained-cell IVF family
-    "pca_power_iter",            # chained-iteration linear algebra
-    "lang_id",                   # multi-regex row-local scan family
-    "tfidf_top_terms",           # two-exchange tf-idf family
-    "quality_lm_score",          # broadcast-model scoring family
-    "corpus_decontaminate",      # broadcast shingle semi-join family
-    "corpus_pack_sequences",     # bucketed-window packing family
-    "multimodal_meta",           # Arrow mapInPandas binary-column family
-    "streaming_dedup",           # dropDuplicates state family
-    "streaming_enriched_counts", # stream x broadcast dim family
+    "streaming_anomaly",
+    "streaming_ewma",
+    "streaming_session_paths",
+    "mr_distributed_sort",
+    "mr_generic_wc",
+    "q9_product_profit",
+    "q18_large_orders",
+    "q13_customer_distribution",
+    "events_minutely",
+    "events_retention",
+    "events_exact_median",
+    "kv_apply_log",
+    "shardkv_migration_diff",
+    "dedup_exact",
+    "dedup_simhash",
+    "dedup_clusters",
+    "ann_ivf_kmeans",
+    "pca_power_iter",
+    "lang_id",
+    "tfidf_top_terms",
+    "quality_lm_score",
+    "corpus_decontaminate",
+    "corpus_pack_sequences",
+    "multimodal_meta",
+    "streaming_dedup",
+    "streaming_enriched_counts",
 ]
 
 CANARY = "mr_wordcount"
 CANARY_QUIET = 1.58  # seconds at sf0.1 in BASELINE.md's quiet window
-QUIET_FACTOR = 1.25  # accept a window only if canary/quiet < this
-MAX_PASSES = 3
-
-
-def canary_class(factor: float) -> str:
-    """BASELINE.md's driver-canary window classes, codified (VERDICT r8
-    item 4): the boundaries reproduce the hand-assigned r1-r8 rows
-    (0.23x fast, 1.06-1.20x normal, 1.27x normal-slow, 1.58x slow)."""
-    if factor < 0.7:
-        return "fast"
-    if factor < 1.25:
-        return "normal"
-    if factor < 1.45:
-        return "normal-slow"
-    return "slow"
-
-
-def baseline_canary_row(canary_sec: float | None) -> str | None:
-    """The exact markdown row for BASELINE.md's driver-canary class
-    table, emitted mechanically per run so the ledger can't drift: the
-    round number is inferred as 1 + the largest COMMITTED BENCH_r{N}
-    (`git ls-files`, so an uncommitted pre-archived current-round file
-    can't bump the label — ADVICE r9; glob fallback when git is
-    unavailable).  None when the canary didn't run at sf0.1 (no factor
-    to classify)."""
-    if not canary_sec:
-        return None
-    import glob
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        names = subprocess.run(
-            ["git", "ls-files", "BENCH_r*.json"],
-            cwd=here,
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
-        ).stdout.splitlines()
-    except Exception:
-        names = glob.glob(os.path.join(here, "BENCH_r*.json"))
-    rounds = [
-        int(m.group(1))
-        for p in names
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    rnd = (max(rounds) if rounds else 0) + 1
-    factor = canary_sec / CANARY_QUIET
-    return (
-        f"| r{rnd} | {canary_sec:.3f} | {factor:.2f}x | "
-        f"{canary_class(factor)} |"
-    )
+REPS = 3
 
 
 def tag_warnings(name: str) -> list[str]:
@@ -309,85 +200,6 @@ def tag_warnings(name: str) -> list[str]:
     return out
 
 
-def floors_of(doc: dict) -> dict[str, float]:
-    """Per-query floors = elementwise minima across every archived window
-    (VERDICT r9 item 1: every number BASELINE.md cites must be derivable
-    from the committed artifact).  New-format artifacts carry a
-    first-class ``windows`` list; the r9 legacy format carried window 2
-    in ``queries`` and window 1 in ``queries_prev_quiet_window``; older
-    rounds are single-window.  Shared with tests/test_bench_ledger.py —
-    the pytest recomputes BASELINE.md's close-row claims through this
-    exact function."""
-    if "windows" in doc:
-        maps = [w["queries"] for w in doc["windows"]]
-    else:
-        maps = [doc.get("queries", {})]
-        if isinstance(doc.get("queries_prev_quiet_window"), dict):
-            maps.append(doc["queries_prev_quiet_window"])
-    floors: dict[str, float] = {}
-    for m in maps:
-        for k, v in m.items():
-            floors[k] = min(v, floors.get(k, v))
-    return floors
-
-
-def archive_window(path: str, window: dict, sf: float | None) -> dict:
-    """Append this run to the window archive at ``path`` (env
-    SPARK_GRAFT_BENCH_ARCHIVE) and rewrite the derived fields: EVERY
-    window a BASELINE.md row will cite is committed first-class, and the
-    top-level ``queries`` is ALWAYS the cross-window minima (flagged so
-    no reader mistakes one window's numbers for the floors — the r9
-    judge misread).  A legacy-format file at ``path`` is lifted into the
-    ``windows`` form, preserving its window(s)."""
-    doc: dict | None
-    try:
-        with open(path) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        doc = None
-    if doc is None:
-        doc = {"metric": "headline_total_wall", "unit": "sec", "sf": sf, "windows": []}
-    if "windows" not in doc:
-        lifted = [
-            {
-                "queries": doc.pop("queries", {}),
-                "queries_pass1": doc.pop("queries_pass1", None),
-                "host_factor_vs_quiet_canary": doc.pop(
-                    "host_factor_vs_quiet_canary", None
-                ),
-                "quiet_window": doc.pop("quiet_window", None),
-                "bench_passes": doc.pop("bench_passes", None),
-                "note": "lifted from legacy single-window format",
-            }
-        ]
-        prev = doc.pop("queries_prev_quiet_window", None)
-        if isinstance(prev, dict):
-            lifted.insert(
-                0,
-                {
-                    "queries": prev,
-                    "note": doc.pop("cross_window_minima_note", None),
-                },
-            )
-        doc["windows"] = lifted
-    if sf is not None and doc.get("sf") not in (None, sf):
-        raise SystemExit(
-            f"archive {path} holds sf={doc.get('sf')} windows; refusing to "
-            f"mix in an sf={sf} run"
-        )
-    doc["windows"].append(window)
-    floors = floors_of(doc)
-    doc["queries"] = floors
-    doc["value"] = round(sum(floors.values()), 3)
-    doc["floors_are_cross_window_minima"] = True
-    doc["n_windows"] = len(doc["windows"])
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    os.replace(tmp, path)
-    return doc
-
-
 def warm_streaming(spark) -> float:
     """One tiny availableNow stream (stateful agg + Python foreachBatch),
     run OUTSIDE timing, same class as the parquet-footer warm-up: the
@@ -398,7 +210,7 @@ def warm_streaming(spark) -> float:
     would otherwise land on whichever headline streaming query happens
     to run first.  A production cluster pays these once per long-lived
     session, so steady-state per-query cost is the honest number.
-    Returns the warm-up's own wall seconds (recorded in the JSON)."""
+    Returns the warm-up's own wall seconds (printed on stderr)."""
     import shutil
     import tempfile
 
@@ -447,6 +259,31 @@ def run_pass(spark, qs, sf_dir: str, F) -> dict[str, float]:
     return timings
 
 
+def summarize(passes: list[dict[str, float]], sf: float | None) -> dict:
+    """The bench record from REPS pass timings ({query: seconds} each):
+    per-query median and min, the sum of medians, and the canary ratio
+    (sf0.1 only).  Queries in HEADLINE but absent from the passes were
+    skipped (not registered)."""
+    names = [n for n in HEADLINE if n in passes[0]]
+    med = {n: round(statistics.median(p[n] for p in passes), 3) for n in names}
+    low = {n: min(p[n] for p in passes) for n in names}
+    canary = med.get(CANARY)
+    factor = round(canary / CANARY_QUIET, 2) if canary and sf == 0.1 else None
+    slowest = sorted(names, key=med.get, reverse=True)[:10]
+    return {
+        "metric": "headline_total_wall",
+        "value": round(sum(med.values()), 3),
+        "unit": "sec",
+        "sf": sf,
+        "reps": len(passes),
+        "n_queries": len(names),
+        "n_skipped": len(HEADLINE) - len(names),
+        "canary_sec": canary,
+        "host_factor_vs_quiet_canary": factor,
+        "slowest10": {n: {"median": med[n], "min": low[n]} for n in slowest},
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
@@ -460,131 +297,21 @@ def main() -> None:
     # once, outside timing (see warm_streaming's docstring)
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     warm_s = warm_streaming(spark)
-
+    print(f"# streaming warm-up {warm_s}s", file=sys.stderr)
     skipped = [name for name in HEADLINE if name not in qs]
+    if skipped:
+        print(f"# skipped (not registered): {skipped}", file=sys.stderr)
+
+    passes = [run_pass(spark, qs, sf_dir, F) for _ in range(REPS)]
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    canary_applies = float(sf or 0) == 0.1
-
-    # Scaling-contract legibility (VERDICT r10 item 2): report the
-    # parallelism the session ACTUALLY runs with, so the driver's CPU
-    # probe can verify $SPARK_GRAFT_CPUS was honored instead of
-    # suspecting "env ignored" when a query is driver-bound at this SF.
-    default_parallelism = spark.sparkContext.defaultParallelism
-    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    best: dict[str, float] = {}
-    pass1: dict[str, float] = {}
-    passes = 0
-    factor = None
-    while passes < MAX_PASSES:
-        passes += 1
-        timings = run_pass(spark, qs, sf_dir, F)
-        if passes == 1:
-            # Cold-pass timings recorded verbatim: passes 2+ run in a warm
-            # session (page cache + JIT), so the per-query minima carry a
-            # systematic flattering bias vs single-pass rounds — read
-            # round-over-round deltas on queries_pass1 for like-for-like.
-            pass1 = dict(timings)
-        best = (
-            {k: min(v, best.get(k, v)) for k, v in timings.items()}
-            if best
-            else timings
-        )
-        wc = best.get(CANARY)
-        factor = round(wc / CANARY_QUIET, 2) if wc and canary_applies else None
-        if factor is None or factor < QUIET_FACTOR:
-            break
-        print(
-            f"# noisy window (canary factor {factor} >= {QUIET_FACTOR}); "
-            f"pass {passes}/{MAX_PASSES}, keeping per-query minima",
-            file=sys.stderr,
-        )
-
-    total = round(sum(best.values()), 3)
-    quiet = factor < QUIET_FACTOR if factor is not None else None
-    archive = os.environ.get("SPARK_GRAFT_BENCH_ARCHIVE")
-    if archive:
-        doc = archive_window(
-            archive,
-            {
-                "queries": best,
-                "queries_pass1": pass1,
-                "host_factor_vs_quiet_canary": factor,
-                "quiet_window": quiet,
-                "streaming_warmup_sec": warm_s,
-                "bench_passes": passes,
-                "default_parallelism": default_parallelism,
-                "shuffle_partitions": shuffle_partitions,
-                "note": os.environ.get("SPARK_GRAFT_BENCH_NOTE"),
-            },
-            float(sf) if sf else None,
-        )
-        print(
-            f"# archived window {doc['n_windows']} to {archive} "
-            f"(cross-window floor sum {doc['value']})",
-            file=sys.stderr,
-        )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": best,
-                "queries_pass1": pass1,
-                "skipped": skipped,
-                "sf": float(sf) if sf else None,
-                "default_parallelism": default_parallelism,
-                "shuffle_partitions": shuffle_partitions,
-                "host_factor_vs_quiet_canary": factor,
-                "streaming_warmup_sec": warm_s,
-                "bench_passes": passes,
-                # None = the canary only calibrates at sf0.1, so noise
-                # was NOT assessed for this run — never claim "quiet"
-                "quiet_window": quiet,
-            }
-        )
+    record = summarize(passes, float(sf) if sf else None)
+    # the parallelism the session actually runs with, so a reader can
+    # check that $SPARK_GRAFT_CPUS was honoured
+    record["default_parallelism"] = spark.sparkContext.defaultParallelism
+    record["shuffle_partitions"] = int(
+        spark.conf.get("spark.sql.shuffle.partitions")
     )
-    # The driver archives only the LAST ~2000 chars of stdout, which
-    # truncates the full record above (BENCH_r07.json `parsed` was null
-    # and the canary/total never made it into the artifact).  Emit a
-    # compact window-normalizable summary as the FINAL line: total,
-    # canary factor, quiet flag, query count, and the 10 slowest
-    # per-query times — guaranteed to fit the tail whole.
-    row = baseline_canary_row(best.get(CANARY) if canary_applies else None)
-    if row is not None:
-        print(f"# BASELINE.md driver-canary class row: {row}", file=sys.stderr)
-    slowest = dict(
-        sorted(best.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": total,
-                "unit": "sec",
-                "sf": float(sf) if sf else None,
-                "n_queries": len(best),
-                "default_parallelism": default_parallelism,
-                "shuffle_partitions": shuffle_partitions,
-                "canary_sec": best.get(CANARY),
-                "host_factor_vs_quiet_canary": factor,
-                # the BASELINE.md ledger class, emitted mechanically so
-                # the driver artifact itself carries the row (r8 item 4)
-                "canary_class": canary_class(factor)
-                if factor is not None
-                else None,
-                "quiet_window": quiet,
-                "bench_passes": passes,
-                "n_skipped": len(skipped),
-                # 10 slowest only — the full per-query map is the
-                # previous line; flagged so no reader mistakes this
-                # for the whole surface
-                "queries": slowest,
-                "queries_truncated_to_slowest10": True,
-            }
-        )
-    )
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

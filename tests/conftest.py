@@ -26,6 +26,17 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def plan_facts(spark, sf_dir):
+    """Per batch query at sf_dir: its plan_counts and
+    bare_window_violations, from ONE whole-surface plan build
+    (tools/plan_audit.audit) shared by every whole-surface plan gate.
+    Only these facts are kept, not the 176 DataFrames."""
+    from tools.plan_audit import audit
+
+    return audit(spark, sf_dir)
+
+
+@pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the testdata tables registered as views,
     mirroring the driver's oracle harness."""

@@ -2,10 +2,11 @@
 
 PLAN_BASELINE.json pins the strategy-level fingerprint (scan / exchange /
 join-strategy counts, cartesian count) of every registered batch query's
-physical plan at sf0.001.  This test rebuilds every plan and diffs against
-the committed baseline, so a silent strategy flip — a broadcast join
-degrading to sort-merge, a new shuffle, a cartesian product sneaking in —
-fails CI instead of waiting for the per-round judge's plan audit.
+physical plan at sf0.001.  This test diffs every plan (built once per
+session by the ``plan_facts`` fixture) against the committed baseline, so
+a silent strategy flip — a broadcast join degrading to sort-merge, a new
+shuffle, a cartesian product sneaking in — fails CI instead of waiting
+for the per-round judge's plan audit.
 
 On an intentional plan change, regenerate the baseline and commit it:
 
@@ -34,7 +35,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def test_plan_fingerprints_match_committed_baseline(spark):
+def test_plan_fingerprints_match_committed_baseline(spark, sf_dir, request):
     with open(BASELINE_PATH) as f:
         doc = json.load(f)
     baseline = doc["plans"]
@@ -46,10 +47,16 @@ def test_plan_fingerprints_match_committed_baseline(spark):
         pytest.skip(f"baseline sf_dir {baseline_sf} not present")
 
     import mapreduceimplementation_spark as eng
-    from tools.plan_audit import plan_counts
+    from tools.plan_audit import audit
+
+    if baseline_sf == sf_dir:
+        facts = request.getfixturevalue("plan_facts")
+    else:
+        facts = audit(spark, baseline_sf)
 
     eng.load_all_operators()
     batch = {n for n in eng.QUERIES if not n.startswith("streaming_")}
+    assert set(facts) == batch
 
     missing = sorted(batch - set(baseline))
     removed = sorted(set(baseline) - batch)
@@ -61,7 +68,7 @@ def test_plan_fingerprints_match_committed_baseline(spark):
 
     diffs = []
     for name in sorted(batch):
-        got = plan_counts(eng.QUERIES[name](spark, baseline_sf))
+        got = facts[name]["plan_counts"]
         want = baseline[name]
         if got != want:
             delta = {

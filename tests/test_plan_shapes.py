@@ -37,19 +37,16 @@ def test_no_cartesian_product(spark, sf_dir, name):
     assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
 
 
-def test_no_cartesian_anywhere(spark, sf_dir):
+def test_no_cartesian_anywhere(plan_facts):
     """Blanket gate over the WHOLE registered surface: no query's plan may
     contain a CartesianProduct — broadcast nested-loop joins against
     provably-bounded sides (ann_topk's query set, one-row scalar frames)
     are the only sanctioned non-equi joins.  Streaming queries are
     skipped (building their plan executes the stream; their batch twins
     are covered)."""
-    offenders = []
-    for name in sorted(eng.QUERIES):
-        if name.startswith("streaming_"):
-            continue
-        if "CartesianProduct" in _plan(spark, sf_dir, name):
-            offenders.append(name)
+    offenders = [
+        name for name, f in plan_facts.items() if f["plan_counts"]["cartesian"]
+    ]
     assert not offenders, f"cartesian products in: {offenders}"
 
 
@@ -118,7 +115,7 @@ def test_incident_join_is_equi_not_range(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_no_bare_window_over_unbounded_input(spark, sf_dir):
+def test_no_bare_window_over_unbounded_input(plan_facts):
     """VERDICT r6 item 9, mechanized: a partition-less WindowExec is a
     single-partition sort at scale, so every one in the registered
     surface must consume a provably BOUNDED relation (an aggregate,
@@ -126,15 +123,11 @@ def test_no_bare_window_over_unbounded_input(spark, sf_dir):
     — tools/plan_audit.bare_window_violations).  Today's bare windows
     are all grid-bounded by design; this makes the class
     regression-proof instead of hand-audited."""
-    from tools.plan_audit import bare_window_violations
-
-    offenders = {}
-    for name in sorted(eng.QUERIES):
-        if name.startswith("streaming_"):
-            continue
-        v = bare_window_violations(eng.QUERIES[name](spark, sf_dir))
-        if v:
-            offenders[name] = v
+    offenders = {
+        name: f["bare_window_violations"]
+        for name, f in plan_facts.items()
+        if f["bare_window_violations"]
+    }
     assert not offenders, f"bare windows over unbounded input: {offenders}"
 
 
@@ -274,35 +267,3 @@ def test_log_mass_linear_tag_and_note(spark):
     assert not any(
         LOG_MASS_LINEAR in w for w in bench.tag_warnings("events_minutely")
     )
-
-
-def test_canary_ledger_row_is_mechanical():
-    """VERDICT r8 item 4: bench.py classifies its own window and prints
-    the exact BASELINE.md driver-canary table row — the class boundaries
-    must reproduce every hand-assigned r1-r8 row, and the emitted row
-    must be a well-formed 4-cell markdown line for the NEXT round."""
-    import re
-
-    import bench
-
-    hand = [
-        (1.13, "normal"),  # r1
-        (1.27, "normal-slow"),  # r2
-        (1.06, "normal"),  # r3
-        (1.58, "slow"),  # r4
-        (0.23, "fast"),  # r5
-        (1.08, "normal"),  # r6
-        (1.20, "normal"),  # r7
-        (0.23, "fast"),  # r8
-    ]
-    for factor, want in hand:
-        assert bench.canary_class(factor) == want, (factor, want)
-    row = bench.baseline_canary_row(0.365)
-    assert row is not None
-    m = re.fullmatch(
-        r"\| r(\d+) \| 0\.365 \| 0\.23x \| fast \|", row
-    )
-    assert m, row
-    # the inferred round is 1 + the largest committed BENCH_r{N}
-    assert int(m.group(1)) >= 9
-    assert bench.baseline_canary_row(None) is None

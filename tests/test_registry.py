@@ -272,10 +272,8 @@ def test_certification_rotation():
     """The driver's correctness gate only records the first ~50 entries of
     queries() (see BASELINE.md).  The entry-file rotation must (a) expose
     the FULL registry — nothing dropped, (b) order never-driver-certified
-    queries first, then (VERDICT r7 item 8) queries whose defining module
-    changed since their last certification, then the plain oldest-first
-    round-robin — so neither a new operator nor a touched one can hide
-    outside the driver's window."""
+    queries first, then the plain oldest-certification-first round-robin
+    — so a new operator cannot hide outside the driver's window."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -283,136 +281,78 @@ def test_certification_rotation():
     assert list(entrymod.oracle_sql()) == [k for k in qs if k in eng.ORACLES]
 
     last = entrymod._last_certified_round()
-    changed = entrymod._changed_since_cert(last)
-
-    def bucket(n):
-        if last.get(n, -1) < 0:
-            return 0
-        sev = changed.get(n)
-        if sev == entrymod._SEV_DIRECT:
-            return 1
-        return 2 if sev is not None else 3
-
-    keys = [(bucket(n), last.get(n, -1)) for n in qs]
+    keys = [last.get(n, -1) for n in qs]
     assert keys == sorted(keys), "queries() not in rotation-policy order"
 
 
 def test_rotation_policy_pure_order():
     """The pure _order policy, pinned on synthetic inputs: never-certified
-    first, direct-function-change next (oldest cert first), module-only
-    change next (oldest cert first), stale round-robin last (oldest cert
-    first), stable within ties."""
+    first, then oldest certification first, stable within ties."""
     import __spark_entry__ as entrymod
 
-    D, M = entrymod._SEV_DIRECT, entrymod._SEV_MODULE
     names = ["a", "b", "c", "d", "e", "f"]
     last = {"a": 5, "b": 3, "c": 7, "d": 3, "f": 1}
-    # e never certified -> bucket 0; a direct + d module-only -> a's
-    # direct severity outranks d's older module-only cert; rest oldest
-    # first (f:1, b:3, c:7)
-    got = entrymod._order(names, last, {"a": D, "d": M})
-    assert got == ["e", "a", "d", "f", "b", "c"]
-    # both module-only -> within-bucket oldest cert first (d:3 before a:5)
-    got = entrymod._order(names, last, {"a": M, "d": M})
-    assert got == ["e", "d", "a", "f", "b", "c"]
-    # no change info -> degrades to the original recency rotation
-    got = entrymod._order(names, last, {})
+    got = entrymod._order(names, last)
     assert got == ["e", "f", "b", "d", "a", "c"]
 
 
-def test_rotation_key_swap_scenario():
-    """VERDICT r9 item 3 pinned as policy: a key certified in an OLD round
-    whose own function was rewritten (a registration swap serving new code
-    under the certified name) must outrank every module-only change — even
-    ones with older certifications — because its certification no longer
-    describes the code it serves.  This is the r9 gap: the swapped plain
-    `streaming_transition_matrix` (cert r7, direct change) ranked BELOW
-    dozens of r6-certified module-only entries and missed the ~50-slot
-    driver window."""
-    import __spark_entry__ as entrymod
-
-    D, M = entrymod._SEV_DIRECT, entrymod._SEV_MODULE
-    # 60 module-only entries with the oldest possible certs...
-    names = [f"mod{i}" for i in range(60)] + ["swapped"]
-    last = {n: 1 for n in names}
-    last["swapped"] = 7  # newer cert than every module-only entry
-    changed = {n: M for n in names}
-    changed["swapped"] = D
-    got = entrymod._order(names, last, changed)
-    # ...and the swapped key still lands first — inside any window
-    assert got[0] == "swapped"
+WINDOW = 50
 
 
-def test_new_file_hunks_parser():
-    """The -U0 diff parser: new-file coordinates, pure-deletion hunks as
-    1-line touch points, /dev/null (deleted file) skipped, b/ prefix and
-    quoting stripped."""
-    import __spark_entry__ as entrymod
-
-    diff = "\n".join(
-        [
-            "diff --git a/pkg/mod.py b/pkg/mod.py",
-            "index 111..222 100644",
-            "--- a/pkg/mod.py",
-            "+++ b/pkg/mod.py",
-            "@@ -10,2 +12,3 @@ def f():",
-            "+x",
-            "@@ -40 +44 @@ def g():",
-            "+y",
-            "@@ -50,3 +53,0 @@ def h():",
-            "-z",
-            "diff --git a/pkg/gone.py b/pkg/gone.py",
-            "--- a/pkg/gone.py",
-            "+++ /dev/null",
-            "@@ -1,5 +0,0 @@",
-            "-dead",
-        ]
-    )
-    got = entrymod._new_file_hunks(diff)
-    assert got == {"pkg/mod.py": [(12, 14), (44, 44), (53, 53)]}
-    # span-intersection semantics the rotation applies to these ranges:
-    # a function spanning 45-60 is touched by (53,53) but not (44,44)
-    hunks = got["pkg/mod.py"]
-    span = (45, 60)
-    assert [h for h in hunks if h[0] <= span[1] and h[1] >= span[0]] == [
-        (53, 53)
-    ]
+def _rounds_to_certify(order, names, last, rounds):
+    """Simulate the driver: each round certifies the first WINDOW entries
+    of ``order(names, last)``.  Returns, per name, the simulated rounds
+    in which it certified."""
+    last = dict(last)
+    start = max(last.values(), default=0)
+    certified = {n: [] for n in names}
+    for r in range(1, rounds + 1):
+        for n in order(names, last)[:WINDOW]:
+            last[n] = start + r
+            certified[n].append(r)
+    return certified
 
 
-def test_rotation_never_starves(spark):
-    """VERDICT r8 item 6: with a ~50-slot driver window over N registered
-    queries, the rotation's worst-case certification gap is
-    ceil(N / 50) rounds — assert from the COMMITTED CORRECTNESS files
-    that no once-certified query has ever exceeded it, and that the
-    current rotation puts the stalest queries inside the next window, so
-    a rotation bug cannot silently starve a query."""
+def _starved(certified, allowed):
+    """Names whose first certification, or any gap between two, exceeds
+    ``allowed`` rounds."""
+    out = {}
+    for n, rs in certified.items():
+        gaps = [b - a for a, b in zip([0, *rs], rs)]
+        if not rs or max(gaps) > allowed:
+            out[n] = rs
+    return out
+
+
+def test_rotation_never_starves():
+    """With a ~50-slot driver window over N registered queries, the
+    rotation certifies every query within ceil(N / 50) rounds, and again
+    within ceil(N / 50) rounds of each certification — simulated from the
+    committed CORRECTNESS history and from an all-never-certified start.
+    A newly registered query lands in the very next window."""
     import math
 
     import __spark_entry__ as entrymod
 
-    entrymod._reset_rotation_cache()
-    last = entrymod._last_certified_round()
-    assert last, "no committed CORRECTNESS files — gate broken"
-    latest = max(last.values())
-    allowed = math.ceil(len(eng.QUERIES) / 50)
-    overdue = {
-        n: latest - r
-        for n, r in last.items()
-        if n in eng.QUERIES and latest - r > allowed
-    }
-    assert not overdue, f"starved beyond ceil(N/50)={allowed}: {overdue}"
-    # the never-certified bucket must fit the next window whole (a new
-    # operator certifies on its first round, never queues behind one)
-    order = list(entrymod.queries())
-    never = [n for n in order if n not in last]
-    assert len(never) <= 50, f"never-certified overflow: {never}"
-    # and within the plain round-robin bucket, no query ahead of the
-    # stalest: _order sortedness is pinned by test_certification_rotation,
-    # so historical non-starvation + sortedness together guarantee the
-    # stalest certified query drains within the allowed gap.  (The
-    # changed-module bucket may preempt a window during a wide refactor —
-    # the historical assertion above is what catches it if that ever
-    # turns into real starvation.)
+    names = list(eng.QUERIES)
+    allowed = math.ceil(len(names) / WINDOW)
+    history = entrymod._last_certified_round()
+    assert history, "no committed CORRECTNESS files — gate broken"
+    for start in (history, {}):
+        certified = _rounds_to_certify(entrymod._order, names, start, 3 * allowed)
+        starved = _starved(certified, allowed)
+        assert not starved, f"starved beyond ceil(N/50)={allowed}: {starved}"
+    # the simulation can see starvation: newest-first re-certifies the
+    # same window forever
+    def newest_first(ns, last):
+        return sorted(ns, key=lambda n: -last.get(n, -1))
+
+    assert _starved(
+        _rounds_to_certify(newest_first, names, history, 3 * allowed), allowed
+    )
+    # a new operator certifies on its first round, never queues behind one
+    assert "new_query" in entrymod._order([*names, "new_query"], history)[:WINDOW]
+
 
 def test_bench_coverage_note_maps_every_untimed_query():
     """VERDICT r6 item 8's contract: every registered query is either in

@@ -151,7 +151,7 @@ def main() -> None:
 
     t1 = bench.run_pass(spark, qs, src, F)
     tN = bench.run_pass(spark, qs, big, F)
-    # second pass, keep minima (the bench auto-quiet discipline, 2 passes)
+    # second pass at each size; each size keeps its faster pass per query
     t1 = {k: min(v, t1[k]) for k, v in bench.run_pass(spark, qs, src, F).items()}
     tN = {k: min(v, tN[k]) for k, v in bench.run_pass(spark, qs, big, F).items()}
 
