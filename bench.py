@@ -2,8 +2,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line on stdout (progress and per-query timings go to stderr).
 
-One rule: after an untimed warm-up (a parquet footer read and one tiny
-stream, see warm_streaming), the suite runs REPS times in one session.
+One rule: after an untimed warm-up (see warm_up), the suite runs REPS
+times in one session.
 Each query reports the median and the min of its REPS walls; ``value`` is
 the sum of the medians.  The min sits beside the median, never in its
 place: on a noisy host a minimum flatters.  The host is read against
@@ -11,9 +11,8 @@ the ``mr_wordcount`` canary in the same run: ``host_factor_vs_quiet_canary``
 is its median over CANARY_QUIET, reported at sf0.1 only (the one scale the
 quiet figure was measured at).
 
-Each query is forced end-to-end by summing crc32(to_json(struct(*))) over
-every output row, so Catalyst cannot prune computed columns out of the
-timing (a plain count() would skip e.g. mr_grep.n_hits entirely).
+Each query is forced end to end by ``force`` (every column of every
+row; tools/profile.py and tools/scale_stress.py force the same way).
 Headline queries that are not registered are counted in ``n_skipped`` and
 named on stderr, never silently dropped.
 
@@ -24,6 +23,7 @@ of a change, use the workload benchmark in perfbench/ (BENCHMARK.json).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import statistics
@@ -202,15 +202,10 @@ def tag_warnings(name: str) -> list[str]:
 
 def warm_streaming(spark) -> float:
     """One tiny availableNow stream (stateful agg + Python foreachBatch),
-    run OUTSIDE timing, same class as the parquet-footer warm-up: the
-    FIRST streaming query of a session pays one-time machinery costs —
-    the py4j callback server for Python foreachBatch, state-store
-    provider init, streaming listener/progress threads — measured at
-    ~8-15 s on this host (ANOMALY_AB_r10.json's first-rep spikes), which
-    would otherwise land on whichever headline streaming query happens
-    to run first.  A production cluster pays these once per long-lived
-    session, so steady-state per-query cost is the honest number.
-    Returns the warm-up's own wall seconds (printed on stderr)."""
+    run outside timing: the first stream of a session pays one-time costs
+    (the py4j callback server, state-store provider init, listener
+    threads) that would otherwise land on whichever timed stream runs
+    first.  Returns its wall seconds."""
     import shutil
     import tempfile
 
@@ -236,7 +231,32 @@ def warm_streaming(spark) -> float:
     return round(time.time() - t0, 3)
 
 
-def run_pass(spark, qs, sf_dir: str, F) -> dict[str, float]:
+def warm_up(spark, *sf_dirs: str) -> float:
+    """Untimed: read every table of each sf dir once (parquet footers, the
+    JVM's reader code, the page cache), then run warm_streaming and return
+    its seconds."""
+    for d in sf_dirs:
+        for path in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+            spark.read.parquet(path).count()
+    return warm_streaming(spark)
+
+
+def force(df):
+    """Run ``df`` to the end and return its Row(n, crc): the row count
+    beside the sum of crc32(to_json(struct(*))) over every row, so
+    Catalyst cannot prune computed columns out of the timing (a plain
+    count() would skip e.g. mr_grep.n_hits entirely)."""
+    from pyspark.sql import functions as F
+
+    return df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.crc32(F.encode(F.to_json(F.struct(*df.columns)), "UTF-8"))).alias(
+            "crc"
+        ),
+    ).collect()[0]
+
+
+def run_pass(spark, qs, sf_dir: str) -> dict[str, float]:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         if name not in qs:
@@ -244,13 +264,7 @@ def run_pass(spark, qs, sf_dir: str, F) -> dict[str, float]:
         for w in tag_warnings(name):
             print(w, file=sys.stderr)
         t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.encode(F.to_json(F.struct(*df.columns)), "UTF-8"))).alias(
-                "crc"
-            ),
-        ).collect()[0]
+        row = force(qs[name](spark, sf_dir))
         timings[name] = round(time.time() - t0, 3)
         print(
             f"# {name}: {row['n']} rows (crc {row['crc']}) in {timings[name]}s",
@@ -259,20 +273,30 @@ def run_pass(spark, qs, sf_dir: str, F) -> dict[str, float]:
     return timings
 
 
+def median_min(passes: list[dict[str, float]]) -> dict[str, dict[str, float]]:
+    """{query: {"median", "min"}} over pass timings ({query: seconds} each)."""
+    return {
+        n: {
+            "median": round(statistics.median(p[n] for p in passes), 3),
+            "min": round(min(p[n] for p in passes), 3),
+        }
+        for n in passes[0]
+    }
+
+
 def summarize(passes: list[dict[str, float]], sf: float | None) -> dict:
     """The bench record from REPS pass timings ({query: seconds} each):
     per-query median and min, the sum of medians, and the canary ratio
     (sf0.1 only).  Queries in HEADLINE but absent from the passes were
     skipped (not registered)."""
-    names = [n for n in HEADLINE if n in passes[0]]
-    med = {n: round(statistics.median(p[n] for p in passes), 3) for n in names}
-    low = {n: min(p[n] for p in passes) for n in names}
-    canary = med.get(CANARY)
+    stats = median_min(passes)
+    names = [n for n in HEADLINE if n in stats]
+    canary = stats[CANARY]["median"] if CANARY in stats else None
     factor = round(canary / CANARY_QUIET, 2) if canary and sf == 0.1 else None
-    slowest = sorted(names, key=med.get, reverse=True)[:10]
+    slowest = sorted(names, key=lambda n: stats[n]["median"], reverse=True)[:10]
     return {
         "metric": "headline_total_wall",
-        "value": round(sum(med.values()), 3),
+        "value": round(sum(stats[n]["median"] for n in names), 3),
         "unit": "sec",
         "sf": sf,
         "reps": len(passes),
@@ -280,29 +304,25 @@ def summarize(passes: list[dict[str, float]], sf: float | None) -> dict:
         "n_skipped": len(HEADLINE) - len(names),
         "canary_sec": canary,
         "host_factor_vs_quiet_canary": factor,
-        "slowest10": {n: {"median": med[n], "min": low[n]} for n in slowest},
+        "slowest10": {n: stats[n] for n in slowest},
     }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
     from mapreduceimplementation_spark.session import get_spark
 
     spark = get_spark("mri-spark-bench")
     qs = entrymod.queries()
 
-    # warm up the JVM + parquet footer caches + streaming machinery
-    # once, outside timing (see warm_streaming's docstring)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    warm_s = warm_streaming(spark)
+    warm_s = warm_up(spark, sf_dir)
     print(f"# streaming warm-up {warm_s}s", file=sys.stderr)
     skipped = [name for name in HEADLINE if name not in qs]
     if skipped:
         print(f"# skipped (not registered): {skipped}", file=sys.stderr)
 
-    passes = [run_pass(spark, qs, sf_dir, F) for _ in range(REPS)]
+    passes = [run_pass(spark, qs, sf_dir) for _ in range(REPS)]
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     record = summarize(passes, float(sf) if sf else None)
     # the parallelism the session actually runs with, so a reader can

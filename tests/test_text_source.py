@@ -5,38 +5,19 @@ runs no Spark job."""
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 import mapreduceimplementation_spark as eng
 from mapreduceimplementation_spark.sources.text import read_text_dir
+from tools.profile import jobs_in_group
 
 eng.load_all_operators()
 
 
-def _jobs_in_group(spark, build) -> int:
-    """Spark jobs launched while ``build()`` runs, counted through a job
-    group.  The status tracker is fed by the asynchronous listener bus, so
-    a sentinel job is run last in the same group: once the tracker shows
-    it, every earlier job of the group has been reported too."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        build()
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    sentinel = None
-    for _ in range(200):
-        ids = tracker.getJobIdsForGroup(group)
-        if ids:
-            sentinel = max(ids)
-            break
-        time.sleep(0.05)
-    assert sentinel is not None, "the sentinel job never reached the tracker"
-    return len([j for j in ids if j != sentinel])
+def test_job_count_sees_a_one_job_build(spark):
+    """The counter must not drop a job that reaches the status tracker
+    late: a build running exactly one job counts 1, every time."""
+    build = lambda: spark.range(3).collect()  # noqa: E731
+    assert [jobs_in_group(spark, build) for _ in range(20)] == [1] * 20
 
 
 def test_building_text_wordcount_runs_no_jobs(spark, sf_dir):
@@ -49,7 +30,7 @@ def test_building_text_wordcount_runs_no_jobs(spark, sf_dir):
     n_files = len([f for f in os.listdir(corpus) if f.endswith(".txt")])
     assert n_files > 32, n_files
     build = lambda: eng.QUERIES["mr_wordcount_text"](spark, sf_dir)  # noqa: E731
-    assert _jobs_in_group(spark, build) == 0
+    assert jobs_in_group(spark, build) == 0
 
 
 def test_read_text_dir_reads_only_matching_files(spark, tmp_path):

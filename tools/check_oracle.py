@@ -12,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:] = [REPO] + [p for p in sys.path if p != os.path.join(REPO, "tools")]  # see profile.py
 
 
 def norm_cell(v):

@@ -26,9 +26,17 @@ import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path[:] = [REPO] + [p for p in sys.path if p != os.path.join(REPO, "tools")]  # see profile.py
 
 BASELINE_PATH = os.path.join(REPO, "PLAN_BASELINE.json")
+
+
+def explain(df) -> str:
+    """``df.explain("formatted")`` as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def plan_counts(df) -> dict:
@@ -39,10 +47,7 @@ def plan_counts(df) -> dict:
     stable across Spark's plan-id renumbering but flips when a join
     strategy or shuffle count actually changes.
     """
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
+    p = explain(df)
     return {
         "scans": len(re.findall(r"^Location:", p, re.M)) or p.count("Location:"),
         "exchanges": p.count("Exchange "),

@@ -1,4 +1,4 @@
-"""Scale-stress harness (round 6): measure, don't argue.
+"""Scale-stress harness: measure, don't argue.
 
 Deterministically inflates the sf0.1 FACT tables REP x (re-salted unique
 ids: new_id = old_id * REP + replica, so orders<->lineitem keys stay
@@ -6,9 +6,11 @@ consistent and every id stays unique; dims stay fixed — how real growth
 looks), then runs the bench HEADLINE queries at 1x and at REPx in one
 warm session and records:
 
-  - per-query wall seconds at both sizes + the growth ratio (linear
-    scaling means ratio <= ~REP; most queries sit far below because the
-    fixed overheads dominate at these sizes),
+  - per-query wall seconds at both sizes, by bench.py's rule: bench.REPS
+    passes per size (sizes alternating), each query's median with its min
+    beside it, and the growth ratio of the medians (linear scaling means
+    ratio <= ~REP; most queries sit far below because the fixed overheads
+    dominate at these sizes),
   - the strategy-level plan fingerprint (tools/plan_audit.plan_counts)
     at both sizes and whether they are EQUAL — the "no broadcast->SMJ
     flip under 10x growth" contract the sf0.001 PLAN_BASELINE cannot
@@ -18,19 +20,20 @@ warm session and records:
 Usage: python tools/scale_stress.py [rep] [out_json] [only_query ...]
 Writes SCALE_r06.json (default) at the repo root; the inflated dataset
 is cached under .scale_data/ and reused across runs.  With only_query
-names, the run restricts to that HEADLINE subset (r10: re-measuring the
-queries an optimization touched without paying the full-surface cost).
+names, the run restricts to that HEADLINE subset (re-measuring the
+queries a change touched without paying the full-surface cost).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path[:] = [REPO] + [p for p in sys.path if p != os.path.join(REPO, "tools")]  # see profile.py
 
 FACTS = ["events", "documents", "embeddings", "lineitem", "orders"]
 DIMS = ["region", "nation", "customer", "supplier", "part"]
@@ -59,10 +62,7 @@ def build_inflated(spark, src_dir: str, rep: int, out: str | None = None) -> str
             built = {}
         if built.get("src") == src_dir and built.get("rep") == rep:
             return out
-        import shutil
-
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
     os.makedirs(out, exist_ok=True)
     reps = spark.range(rep).select(F.col("id").alias("_rep"))
 
@@ -128,8 +128,6 @@ def main() -> None:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import bench
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
     from mapreduceimplementation_spark.session import get_spark
     from tools.plan_audit import plan_counts
@@ -142,18 +140,15 @@ def main() -> None:
         qs = {k: v for k, v in qs.items() if k in only}
     big = build_inflated(spark, src, rep)
 
-    # warm both datasets' footers + the streaming machinery outside
-    # timing (bench.warm_streaming: first-stream-of-session one-time
-    # costs must not land on a timed streaming query)
-    spark.read.parquet(os.path.join(src, "lineitem.parquet")).count()
-    spark.read.parquet(os.path.join(big, "lineitem.parquet")).count()
-    bench.warm_streaming(spark)
+    # both datasets' tables + the streaming machinery, outside timing
+    bench.warm_up(spark, src, big)
 
-    t1 = bench.run_pass(spark, qs, src, F)
-    tN = bench.run_pass(spark, qs, big, F)
-    # second pass at each size; each size keeps its faster pass per query
-    t1 = {k: min(v, t1[k]) for k, v in bench.run_pass(spark, qs, src, F).items()}
-    tN = {k: min(v, tN[k]) for k, v in bench.run_pass(spark, qs, big, F).items()}
+    # bench.REPS passes per size, sizes alternating; bench.py's rule
+    passes1, passesN = [], []
+    for _ in range(bench.REPS):
+        passes1.append(bench.run_pass(spark, qs, src))
+        passesN.append(bench.run_pass(spark, qs, big))
+    t1, tN = bench.median_min(passes1), bench.median_min(passesN)
 
     plans_equal, plan_diffs = {}, {}
     for name in bench.HEADLINE:
@@ -163,11 +158,7 @@ def main() -> None:
         pN = plan_counts(qs[name](spark, big))
         plans_equal[name] = p1 == pN
         if p1 != pN:
-            plan_diffs[name] = {
-                k: (p1.get(k), pN.get(k))
-                for k in sorted(set(p1) | set(pN))
-                if p1.get(k) != pN.get(k)
-            }
+            plan_diffs[name] = {k: (p1[k], pN[k]) for k in p1 if p1[k] != pN[k]}
 
     # sampled-mode rows for the quadratic diagnostics (VERDICT r9 item
     # 5): every headline query exposing the documented sample_mod escape
@@ -180,55 +171,32 @@ def main() -> None:
     sample_k = 4
     sampled = {}
     for name in bench.HEADLINE:
-        if name not in qs:
-            continue
-        try:
-            has_sample = "sample_mod" in inspect.signature(qs[name]).parameters
-        except (TypeError, ValueError):
-            has_sample = False
-        if not has_sample:
+        if name not in qs or "sample_mod" not in inspect.signature(qs[name]).parameters:
             continue
         walls = {}
         for label, d in (("t1", src), (f"t{rep}", big)):
             t0 = time.time()
-            df = qs[name](spark, d, sample_mod=sample_k)
-            df.agg(
-                F.count(F.lit(1)),
-                F.sum(
-                    F.crc32(
-                        F.encode(F.to_json(F.struct(*df.columns)), "UTF-8")
-                    )
-                ),
-            ).collect()
+            bench.force(qs[name](spark, d, sample_mod=sample_k))
             walls[label] = round(time.time() - t0, 3)
         sampled[name] = {
             "sample_mod": sample_k,
             **walls,
-            "ratio": round(walls[f"t{rep}"] / walls["t1"], 2)
-            if walls["t1"]
-            else None,
+            "ratio": round(walls[f"t{rep}"] / walls["t1"], 2),
         }
 
-    # the canary is calibrated at sf0.1 only (bench.py's guard): at any
-    # other src the factor would be meaningless, so record None
-    sf_name = os.path.basename(src.rstrip("/"))
-    canary = t1.get(bench.CANARY) if sf_name == "sf0.1" else None
-    factor = round(canary / bench.CANARY_QUIET, 2) if canary else None
+    # the canary factor by bench.py's rule (None unless src is sf0.1)
+    sf = 0.1 if os.path.basename(src.rstrip("/")) == "sf0.1" else None
+    factor = bench.summarize(passes1, sf)["host_factor_vs_quiet_canary"]
+    ratios = {n: round(tN[n]["median"] / t1[n]["median"], 2) for n in sorted(t1)}
     record = {
         "metric": "scale_stress",
         "rep": rep,
         "src": src,
         "queries": {
-            name: {
-                "t1": t1[name],
-                f"t{rep}": tN[name],
-                "ratio": round(tN[name] / t1[name], 2) if t1[name] else None,
-            }
-            for name in sorted(set(t1) & set(tN))
+            name: {"t1": t1[name], f"t{rep}": tN[name], "ratio": ratio}
+            for name, ratio in ratios.items()
         },
-        "max_ratio": max(
-            round(tN[n] / t1[n], 2) for n in set(t1) & set(tN) if t1[n]
-        ),
+        "max_ratio": max(ratios.values()),
         "sampled_queries": sampled,
         "plans_equal_at_scale": plans_equal,
         "plan_diffs": plan_diffs,
