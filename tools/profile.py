@@ -48,13 +48,14 @@ def poll(done, timeout_s: float) -> bool:
     return bool(done())
 
 
-def settle(sc) -> None:
-    """Wait until the status tracker, fed by the asynchronous listener
-    bus, has seen every job submitted so far: a sentinel job runs in its
-    own group, and once the tracker shows it, every earlier job is in."""
+def settle(spark) -> None:
+    """Wait until the status tracker (fed by the asynchronous listener bus)
+    has seen every job so far: once a sentinel job in its own group shows,
+    every earlier job is in.  JVM-only: an RDD job starts a Python worker."""
+    sc = spark.sparkContext
     sentinel = f"sentinel-{uuid.uuid4().hex}"
     with job_group(sc, sentinel):
-        sc.parallelize([0], 1).count()
+        spark.range(1).collect()
     if not poll(lambda: sc.statusTracker().getJobIdsForGroup(sentinel), 10.0):
         raise TimeoutError("the sentinel job never reached the status tracker")
 
@@ -66,7 +67,7 @@ def jobs_in_group(spark, build) -> int:
     group = f"jobcount-{uuid.uuid4().hex}"
     with job_group(sc, group):
         build()
-    settle(sc)
+    settle(spark)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -124,7 +125,7 @@ def profile(spark, sf_dir: str, queries: dict, plans: str | None = None):
                 runs = streams.started[n_started:]
                 if not poll(lambda: set(runs) <= streams.ended, 30.0):
                     print(f"# {name}: a stream never reported its end", file=sys.stderr)
-                settle(sc)
+                settle(spark)
                 jobs.append({p: len(set(tracker.getJobIdsForGroup(g)) - seen[p])
                              for p, g in groups.items()})
                 jobs[-1]["stream"] = sum(len(tracker.getJobIdsForGroup(r)) for r in runs)
