@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduceimplementation_spark.sources.fixtures import _materialize_once
 from mapreduceimplementation_spark.sources.jsonl import EVENTS_SCHEMA, _TS_FMT
 
 
@@ -24,44 +25,39 @@ def materialize_events_csv(sf_dir: str) -> str:
     Timestamps as 'YYYY-MM-DD HH:MM:SS.ffffff', doubles via repr (shortest
     round-trip), QUOTE_MINIMAL with doubled quotes — value-exact against
     the parquet twin."""
-    from mapreduceimplementation_spark.sources.fixtures import fixture_dir
+    src = os.path.join(sf_dir, "events.parquet")
 
-    d = fixture_dir("mri_spark_events_csv", os.path.join(sf_dir, "events.parquet"))
-    marker = os.path.join(d, "_SUCCESS")
-    if os.path.exists(marker):
-        return d
-    import pyarrow.parquet as pq
+    def write(d: str) -> None:
+        import pyarrow.parquet as pq
 
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    cols = t.column_names
-    rows = t.to_pylist()
-    n_shards = 8
-    outs = []
-    writers = []
-    for i in range(n_shards):
-        f = open(os.path.join(d, f"events-{i:02d}.csv"), "w", newline="")
-        w = _csv.writer(f, quoting=_csv.QUOTE_MINIMAL, doublequote=True)
-        w.writerow(cols)
-        outs.append(f)
-        writers.append(w)
-    try:
-        for i, row in enumerate(rows):
-            rec = []
-            for c in cols:
-                v = row[c]
-                if c == "ts" and v is not None:
-                    v = v.strftime("%Y-%m-%d %H:%M:%S.%f")
-                elif isinstance(v, float):
-                    v = repr(v)
-                rec.append(v)
-            writers[i % n_shards].writerow(rec)
-    finally:
-        for f in outs:
-            f.close()
-    with open(marker, "w"):
-        pass
-    return d
+        t = pq.read_table(src)
+        cols = t.column_names
+        rows = t.to_pylist()
+        n_shards = 8
+        outs = []
+        writers = []
+        for i in range(n_shards):
+            f = open(os.path.join(d, f"events-{i:02d}.csv"), "w", newline="")
+            w = _csv.writer(f, quoting=_csv.QUOTE_MINIMAL, doublequote=True)
+            w.writerow(cols)
+            outs.append(f)
+            writers.append(w)
+        try:
+            for i, row in enumerate(rows):
+                rec = []
+                for c in cols:
+                    v = row[c]
+                    if c == "ts" and v is not None:
+                        v = v.strftime("%Y-%m-%d %H:%M:%S.%f")
+                    elif isinstance(v, float):
+                        v = repr(v)
+                    rec.append(v)
+                writers[i % n_shards].writerow(rec)
+        finally:
+            for f in outs:
+                f.close()
+
+    return _materialize_once("mri_spark_events_csv", src, write)
 
 
 def read_events_csv(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduceimplementation_spark.sources.fixtures import _materialize_once
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -31,38 +33,34 @@ def materialize_events_jsonl(sf_dir: str) -> str:
     Timestamps are written as 'YYYY-MM-DD HH:MM:SS.ffffff' strings and
     doubles via json's shortest-round-trip repr, so the JSON read is
     bit-identical to the parquet read."""
-    from mapreduceimplementation_spark.sources.fixtures import fixture_dir
+    src = os.path.join(sf_dir, "events.parquet")
 
-    d = fixture_dir("mri_spark_events_jsonl", os.path.join(sf_dir, "events.parquet"))
-    marker = os.path.join(d, "_SUCCESS")
-    if os.path.exists(marker):
-        return d
-    import pyarrow.parquet as pq
+    def write(d: str) -> None:
+        import pyarrow.parquet as pq
 
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    cols = t.column_names
-    rows = t.to_pylist()
-    # 8 shards so the local read parallelizes like a multi-file feed would
-    n_shards = 8
-    outs = [
-        open(os.path.join(d, f"events-{i:02d}.jsonl"), "w") for i in range(n_shards)
-    ]
-    try:
-        for i, row in enumerate(rows):
-            rec = {}
-            for c in cols:
-                v = row[c]
-                if c == "ts" and v is not None:
-                    v = v.strftime("%Y-%m-%d %H:%M:%S.%f")
-                rec[c] = v
-            outs[i % n_shards].write(json.dumps(rec) + "\n")
-    finally:
-        for f in outs:
-            f.close()
-    with open(marker, "w"):
-        pass
-    return d
+        t = pq.read_table(src)
+        cols = t.column_names
+        rows = t.to_pylist()
+        # 8 shards so the local read parallelizes like a multi-file feed would
+        n_shards = 8
+        outs = [
+            open(os.path.join(d, f"events-{i:02d}.jsonl"), "w")
+            for i in range(n_shards)
+        ]
+        try:
+            for i, row in enumerate(rows):
+                rec = {}
+                for c in cols:
+                    v = row[c]
+                    if c == "ts" and v is not None:
+                        v = v.strftime("%Y-%m-%d %H:%M:%S.%f")
+                    rec[c] = v
+                outs[i % n_shards].write(json.dumps(rec) + "\n")
+        finally:
+            for f in outs:
+                f.close()
+
+    return _materialize_once("mri_spark_events_jsonl", src, write)
 
 
 def read_events_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduceimplementation_spark.sources.fixtures import _materialize_once
 from mapreduceimplementation_spark.sources.tables import load_table
 
 
@@ -29,15 +30,14 @@ def materialize_events_orc(spark: SparkSession, sf_dir: str) -> str:
     Written by Spark's own ORC writer from the loaded (ts-normalized)
     events table, so the fixture is exactly what a production ORC lake
     would hold — micro-resolution UTC timestamps, native doubles."""
-    from mapreduceimplementation_spark.sources.fixtures import fixture_dir
-
-    d = fixture_dir("mri_spark_events_orc", os.path.join(sf_dir, "events.parquet"))
-    if os.path.exists(os.path.join(d, "_SUCCESS")):
-        return d
-    load_table(spark, sf_dir, "events").repartition(8).write.mode(
-        "overwrite"
-    ).orc(d)
-    return d
+    return _materialize_once(
+        "mri_spark_events_orc",
+        os.path.join(sf_dir, "events.parquet"),
+        lambda d: load_table(spark, sf_dir, "events")
+        .repartition(8)
+        .write.mode("overwrite")
+        .orc(d),
+    )
 
 
 def read_events_orc(spark: SparkSession, sf_dir: str) -> DataFrame:

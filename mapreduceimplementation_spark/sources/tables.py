@@ -60,36 +60,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cached = _PLAN_CACHE.get(key)
         if cached is not None:
             return cached
-    df = _load_table_uncached(spark, sf_dir, name, path)
+    df = spark.read.parquet(path)
+    if name == "events":
+        df = _normalize_events_ts(df)
     if key is not None:
         _PLAN_CACHE[key] = df
     return df
 
 
-def _load_table_uncached(
-    spark: SparkSession, sf_dir: str, name: str, path: str
-) -> DataFrame:
-    if name == "events":
-        # events.ts arrives in whichever parquet timestamp encoding the
-        # data generator used: TIMESTAMP(NANOS) (rejected by Spark's
-        # vectorized reader — surfaced as long under nanosAsLong),
-        # TIMESTAMP(MICROS) isAdjustedToUTC=false (reads as TIMESTAMP_NTZ),
-        # or UTC-adjusted micros (reads as TIMESTAMP already).  Normalize
-        # all three to session-tz TIMESTAMP micros — the value DuckDB's
-        # micro-resolution TIMESTAMP oracle sees.  The nanosAsLong conf
-        # comes from session.tune.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """events.ts arrives in whichever parquet timestamp encoding the data
+    generator used: TIMESTAMP(NANOS) (rejected by Spark's vectorized
+    reader — surfaced as long under nanosAsLong), TIMESTAMP(MICROS)
+    isAdjustedToUTC=false (reads as TIMESTAMP_NTZ), or UTC-adjusted
+    micros (reads as TIMESTAMP already).  Normalize all three to
+    session-tz TIMESTAMP micros — the value DuckDB's micro-resolution
+    TIMESTAMP oracle sees.  The nanosAsLong conf comes from session.tune.
+    Batch and stream readers of events both go through here."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            # session tz is UTC (session.tune), so the cast is lossless
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        # session tz is UTC (session.tune), so the cast is lossless
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

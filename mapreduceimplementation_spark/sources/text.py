@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceimplementation_spark.sources.fixtures import _materialize_once
+
 
 def read_text_dir(
     spark: SparkSession, directory: str, pattern: str = "*.txt"
@@ -48,27 +50,19 @@ def materialize_text_corpus(sf_dir: str) -> str:
     wholetext read path can be exercised and oracle-checked.  This is test
     fixture preparation, not part of the measured operator — a production
     corpus already IS files."""
-    from mapreduceimplementation_spark.sources.fixtures import fixture_dir
-
     src = os.path.join(sf_dir, "documents.parquet")
-    d = fixture_dir("mri_spark_textcorpus", src)
-    marker = os.path.join(d, "_SUCCESS")
-    if os.path.exists(marker):
-        return d
-    import pyarrow.parquet as pq
 
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    for doc_id, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
-        if text is None:
-            continue
-        with open(os.path.join(d, f"doc-{doc_id:08d}.txt"), "w") as f:
-            f.write(text)
-    with open(marker, "w"):
-        pass
-    return d
+    def write(d: str) -> None:
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(src, columns=["doc_id", "text"])
+        for doc_id, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
+            if text is None:
+                continue
+            with open(os.path.join(d, f"doc-{doc_id:08d}.txt"), "w") as f:
+                f.write(text)
+
+    return _materialize_once("mri_spark_textcorpus", src, write)
 
 
 def write_mr_out(

@@ -30,8 +30,7 @@ from pyspark.sql import functions as F
 from mapreduceimplementation_spark.registry import register
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _run_stream,
-    _stop_query,
+    run_to_memory,
 )
 
 _SINK = "d3_dedup_sink"
@@ -42,7 +41,6 @@ def run_dedup_stream(
 ) -> DataFrame:
     """Run the streaming dedup over `path` to completion; return the
     distinct-key table from the memory sink."""
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "event_type", F.date_trunc("day", "ts").alias("day")
     )
@@ -52,14 +50,7 @@ def run_dedup_stream(
     )
     # dropDuplicates emits each first-seen key eagerly; the trailing
     # no-data batch would only evict expired key state — skipped.
-    _run_stream(
-        spark,
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-        skip_no_data_batch=True,
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, deduped, sink, "append", skip_no_data_batch=True)
 
 
 @register(

@@ -26,8 +26,7 @@ from mapreduceimplementation_spark.registry import register
 from mapreduceimplementation_spark.sources.tables import load_table
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _run_stream,
-    _stop_query,
+    run_to_memory,
 )
 
 _TIER_MIN_EVENTS = 67  # ~median per-user event count at sf0.01
@@ -47,7 +46,6 @@ def user_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_enriched_stream(
     spark: SparkSession, path: str, sf_dir: str, sink: str = _SINK, **options
 ) -> DataFrame:
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     prof = user_tiers(spark, sf_dir)
     enriched = ev.join(prof, "user_id")  # stream-static: stateless, no watermark
@@ -60,13 +58,7 @@ def run_enriched_stream(
         )
         .select(F.col("win.start").alias("day"), "tier", "n_events", "total_value")
     )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, agg, sink, "complete")
 
 
 @register(

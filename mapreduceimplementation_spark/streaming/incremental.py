@@ -8,9 +8,9 @@ serving table.  The serving table ends exactly equal to the one-pass
 batch rollup — the oracle is IDENTICAL to D1's — so the green row proves
 the upsert loop loses nothing across microbatch boundaries.
 
-The upsert here is the no-ACID-table fallback (left-anti + union into an
-alternating parquet dir, swapped atomically by reference); on a real
-deployment the foreachBatch body becomes MERGE INTO on Delta/Iceberg —
+The upsert (``windowed.run_upsert``) is the no-ACID-table fallback
+(left-anti + union into an alternating parquet dir, swapped atomically
+by reference); on a real deployment the foreachBatch body becomes MERGE INTO on Delta/Iceberg —
 same update-mode feed, same keys, same exactness argument.  Each batch's
 merge cost is proportional to CHANGED keys (update mode), not total
 windows — the property that makes a year-long rollup maintainable by a
@@ -20,61 +20,21 @@ stream that only ever touches the current hour.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceimplementation_spark.functions.stable import dsum, sql_dsum
+from mapreduceimplementation_spark.functions.stable import sql_dsum
 from mapreduceimplementation_spark.registry import ORACLES, register
+from mapreduceimplementation_spark.sources.fixtures import _materialize_once
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _run_stream,
+    _minutely_counts,
+    run_to_memory,
+    run_upsert,
 )
 
 _N_CHUNKS = 4
-
-
-def _make_upsert(work: str, state: dict, keys: list[str]):
-    """The shared foreachBatch upsert closure (D7/D17/D23): left-anti +
-    union into an alternating parquet dir keyed on ``keys``, swapped by
-    reference.
-
-    Per-batch cost discipline: ``batch_df`` re-executes its microbatch
-    plan (state-store read included) on EVERY action, and the naive loop
-    takes three (isEmpty, the anti-join probe side, the union write) —
-    persist() caches the microbatch once so the plan runs once, and the
-    empty check reuses the cached partitions.  The serving table is
-    key-bounded (cells/users, not stream length), so caching a batch of
-    changed keys is always executor-memory-safe."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            sp = batch_df.sparkSession
-            new_dir = os.path.join(work, f"state-{batch_id}")
-            if state["dir"] is None:
-                out = batch_df
-            else:
-                # serving-table schema == microbatch schema by construction
-                # (the union below enforces it); passing it explicitly
-                # skips a footer-inference job per microbatch (guide §6)
-                prev = sp.read.schema(batch_df.schema).parquet(state["dir"])
-                kept = prev.join(batch_df.select(*keys), keys, "left_anti")
-                out = kept.unionByName(batch_df)
-            out.write.mode("overwrite").parquet(new_dir)
-            old = state["dir"]
-            state["dir"] = new_dir  # swap by reference — readers see old or new
-            state["batches"] += 1
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
-        finally:
-            batch_df.unpersist()
-
-    return _upsert
 
 
 def _chronological_feed(sf_dir: str) -> str:
@@ -97,29 +57,37 @@ def _chronological_feed(sf_dir: str) -> str:
     round-trips, measured in the r11 stream profile).  The multi-batch
     pytests drive their own feeds with maxFilesPerTrigger=1, so the
     finer-sliced proofs stay exercised."""
-    from mapreduceimplementation_spark.sources.fixtures import fixture_dir
-
     src = os.path.join(sf_dir, "events.parquet")
-    d = fixture_dir("mri_spark_events_chunks", src)
-    marker = os.path.join(d, "_SUCCESS")
-    if os.path.exists(marker):
-        return d
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(src)
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
-    n = t.num_rows
-    step = (n + _N_CHUNKS - 1) // _N_CHUNKS
-    for i in range(_N_CHUNKS):
-        chunk = t.slice(i * step, step)
-        p = os.path.join(d, f"chunk-{i:02d}.parquet")
-        pq.write_table(chunk, p)
-        os.utime(p, (1_000_000 + i, 1_000_000 + i))  # mtime = arrival order
-    with open(marker, "w"):
-        pass
-    return d
+    def write(d: str) -> None:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(src)
+        t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
+        step = (t.num_rows + _N_CHUNKS - 1) // _N_CHUNKS
+        for i in range(_N_CHUNKS):
+            p = os.path.join(d, f"chunk-{i:02d}.parquet")
+            pq.write_table(t.slice(i * step, step), p)
+            os.utime(p, (1_000_000 + i, 1_000_000 + i))  # mtime = arrival order
+
+    return _materialize_once("mri_spark_events_chunks", src, write)
+
+
+def _feed_stream(
+    spark: SparkSession, sf_dir: str, feed_dir: str | None = None
+) -> DataFrame:
+    """The ``chunk-*.parquet`` events feed as a file stream: ``feed_dir``
+    if given, else the default ``_chronological_feed(sf_dir)``."""
+    # default fixture: 2 files/trigger = two microbatches (the minimal
+    # cross-batch proof; see _chronological_feed).  Test-supplied feeds
+    # keep 1 file/trigger so their finer-sliced straddle proofs hold.
+    feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
+    return _events_stream(
+        spark,
+        os.path.join(feed, "chunk-*.parquet"),
+        maxFilesPerTrigger="1" if feed_dir is not None else "2",
+    )
 
 
 def run_incremental_rollup(
@@ -129,44 +97,8 @@ def run_incremental_rollup(
     number of microbatches that carried updates).  ``feed_dir`` overrides
     the default chunked-events feed (tests use it to force windows that
     straddle microbatch boundaries)."""
-    feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
-    # default fixture: 2 files/trigger = two microbatches (the minimal
-    # cross-batch proof; see _chronological_feed).  Test-supplied feeds
-    # keep 1 file/trigger so their finer-sliced straddle proofs hold.
-    ev = _events_stream(
-        spark,
-        os.path.join(feed, "chunk-*.parquet"),
-        maxFilesPerTrigger="1" if feed_dir is not None else "2",
-    )
-    agg = (
-        ev.withWatermark("ts", "1 minute")
-        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("minute"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    work = tempfile.mkdtemp(prefix="mri_spark_d7_state_")
-    state = {"dir": None, "batches": 0}
-    _upsert = _make_upsert(work, state, ["minute", "event_type"])
-
-    # update-mode agg: the trailing no-data batch only evicts state whose
-    # final value was already upserted when it last changed — skipped
-    # (r11 profile: ~0.7 s of store scans + an empty foreachBatch call).
-    _run_stream(
-        spark,
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_upsert),
-        skip_no_data_batch=True,
-    )
-    assert state["dir"] is not None, "stream produced no updates"
-    return spark.read.parquet(state["dir"]), state["batches"]
+    agg = _minutely_counts(_feed_stream(spark, sf_dir, feed_dir))
+    return run_upsert(spark, agg, ["minute", "event_type"])
 
 
 @register(
@@ -230,13 +162,7 @@ def streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one aggregation shape that is safe WITHOUT a watermark), and the
     oracle is IDENTICAL to B36's batch histogram: the green row proves
     cross-microbatch cell accumulation is count-exact."""
-    from mapreduceimplementation_spark.streaming.windowed import _stop_query
-
-    _stop_query(spark, _D9_SINK)
-    feed = _chronological_feed(sf_dir)
-    ev = _events_stream(
-        spark, os.path.join(feed, "chunk-*.parquet"), maxFilesPerTrigger="2"
-    )
+    ev = _feed_stream(spark, sf_dir)
     bin_ = F.least(F.floor(F.col("value") / _H_WIDTH), F.lit(_H_BINS))
     agg = (
         ev.select(
@@ -247,13 +173,7 @@ def streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bin", "bin_lo")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(_D9_SINK)
-        .outputMode("complete"),
-    )
-    return spark.table(_D9_SINK)
+    return run_to_memory(spark, agg, _D9_SINK, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -267,27 +187,9 @@ def run_ab_stream(
     serving table, number of microbatches that carried updates)."""
     from mapreduceimplementation_spark.plans.events import ab_per_user_facts
 
-    feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
-    # default fixture: 2 files/trigger = two microbatches (the minimal
-    # cross-batch proof; see _chronological_feed).  Test-supplied feeds
-    # keep 1 file/trigger so their finer-sliced straddle proofs hold.
-    ev = _events_stream(
-        spark,
-        os.path.join(feed, "chunk-*.parquet"),
-        maxFilesPerTrigger="1" if feed_dir is not None else "2",
-    )
+    ev = _feed_stream(spark, sf_dir, feed_dir)
     per_user = ab_per_user_facts(ev.select("user_id", "event_type", "value"))
-    work = tempfile.mkdtemp(prefix="mri_spark_d17_state_")
-    state = {"dir": None, "batches": 0}
-    _upsert = _make_upsert(work, state, ["variant", "user_id"])
-
-    _run_stream(
-        spark,
-        per_user.writeStream.outputMode("update")
-        .foreachBatch(_upsert),
-    )
-    assert state["dir"] is not None, "stream produced no updates"
-    return spark.read.parquet(state["dir"]), state["batches"]
+    return run_upsert(spark, per_user, ["variant", "user_id"])
 
 
 def _register_d17() -> None:
@@ -357,34 +259,14 @@ def run_anomaly_stream(
     table they derive from is exactly maintainable.  Cell cardinality is
     days × types — calendar-bounded, never event-volume-bounded — so the
     detector query is serving-table-sized at any corpus scale."""
-    feed = feed_dir if feed_dir is not None else _chronological_feed(sf_dir)
-    # default fixture: 2 files/trigger = two microbatches (the minimal
-    # cross-batch proof; see _chronological_feed).  Test-supplied feeds
-    # keep 1 file/trigger so their finer-sliced straddle proofs hold.
-    ev = _events_stream(
-        spark,
-        os.path.join(feed, "chunk-*.parquet"),
-        maxFilesPerTrigger="1" if feed_dir is not None else "2",
-    )
     agg = (
-        ev.withWatermark("ts", "1 minute")
+        _feed_stream(spark, sf_dir, feed_dir)
+        .withWatermark("ts", "1 minute")
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("win.start").alias("day"), "event_type", "c")
     )
-    work = tempfile.mkdtemp(prefix="mri_spark_d23_state_")
-    state = {"dir": None, "batches": 0}
-    _upsert = _make_upsert(work, state, ["day", "event_type"])
-
-    # update-mode agg: no-data batch is eviction-only — skipped (see D7)
-    _run_stream(
-        spark,
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_upsert),
-        skip_no_data_batch=True,
-    )
-    assert state["dir"] is not None, "stream produced no updates"
-    return spark.read.parquet(state["dir"]), state["batches"]
+    return run_upsert(spark, agg, ["day", "event_type"])
 
 
 @register("streaming_anomaly", oracle=ORACLES["events_anomaly"])
@@ -511,9 +393,6 @@ def run_ewma_stream(
     (type, day) = closed row if any, else the max-c snapshot — unique
     and deterministic by the D22 argument (every batch touching a type
     either grows the open day's count or closes it)."""
-    from mapreduceimplementation_spark.streaming.windowed import _stop_query
-
-    _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
         .select("ts", "event_type")
@@ -526,18 +405,12 @@ def run_ewma_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_stream(
-        spark,
-        log.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update"),
-    )
+    mem = run_to_memory(spark, log, sink, "update")
     pick = _PsWindow.partitionBy("event_type", "day").orderBy(
         F.col("closed").desc(), F.col("c").desc()
     )
     return (
-        spark.table(sink)
-        .withColumn("rn", F.row_number().over(pick))
+        mem.withColumn("rn", F.row_number().over(pick))
         .where(F.col("rn") == 1)
         .select("day", "event_type", "c", "ewma", "spike")
     )

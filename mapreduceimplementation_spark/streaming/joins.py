@@ -30,8 +30,7 @@ from pyspark.sql import functions as F
 from mapreduceimplementation_spark.registry import DENSITY_QUADRATIC, register
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _run_stream,
-    _stop_query,
+    run_to_memory,
 )
 
 _SINK = "d4_stream_join_sink"
@@ -42,7 +41,6 @@ def run_stream_join(
 ) -> DataFrame:
     """Run the click⋈purchase stream-stream join over `path` to
     completion; return the joined pairs from the memory sink."""
-    _stop_query(spark, sink)
     clicks = (
         _events_stream(spark, path, **source_options)
         .where(F.col("event_type") == "click")
@@ -86,14 +84,7 @@ def run_stream_join(
     # trailing no-data batch would only evict state (r11 profile: it cost
     # as much as the data batch — a full join-state scan + 32 store
     # commits for zero output rows), so it is skipped.
-    _run_stream(
-        spark,
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-        skip_no_data_batch=True,
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, joined, sink, "append", skip_no_data_batch=True)
 
 
 @register(
@@ -141,7 +132,6 @@ def run_left_outer_join(
     """Run the click⟕purchase LEFT-OUTER interval join over `path` to
     completion; unmatched clicks emit one NULL-purchase row once the
     watermark passes their match window (state eviction)."""
-    _stop_query(spark, sink)
     cutoff = F.lit(_LOJ_CLICK_CUTOFF).cast("timestamp")
     clicks = (
         _events_stream(spark, path, **source_options)
@@ -190,13 +180,7 @@ def run_left_outer_join(
             "micros_after_click"
         ),
     )
-    _run_stream(
-        spark,
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, joined, sink, "append")
 
 
 @register(
@@ -251,7 +235,6 @@ def run_full_outer_join(
     AND each unmatched purchase emits one NULL row at state eviction —
     the only shape that exercises watermark-forced output on BOTH
     buffers."""
-    _stop_query(spark, sink)
     cutoff = F.lit(_FOJ_CUTOFF).cast("timestamp")
     clicks = (
         _events_stream(spark, path, **source_options)
@@ -298,13 +281,7 @@ def run_full_outer_join(
             "micros_after_click"
         ),
     )
-    _run_stream(
-        spark,
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, joined, sink, "append")
 
 
 @register(
@@ -379,7 +356,6 @@ def run_asof_join(
     partial aggregation collapses candidates as they arrive), keyed and
     evicted by window.  This is the streaming twin of the batch
     events_asof_join (B13), which uses a window-function last-value plan."""
-    _stop_query(spark, sink)
     clicks = (
         _events_stream(spark, path, **source_options)
         .where(F.col("event_type") == "click")
@@ -439,13 +415,7 @@ def run_asof_join(
             ).alias("micros_since_click"),
         )
     )
-    _run_stream(
-        spark,
-        asof.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, asof, sink, "append")
 
 
 @register(
@@ -535,7 +505,6 @@ def run_transition_matrix(
     to the applyInPandasWithState lag (linear, one event of state per
     user — D2's Python-state tradeoff: ~2x slower per row than JVM
     state, no batch-plan reuse)."""
-    _stop_query(spark, sink)
     prevs = (
         _events_stream(spark, path, **source_options)
         .select(
@@ -589,13 +558,7 @@ def run_transition_matrix(
             "n",
         )
     )
-    _run_stream(
-        spark,
-        matrix.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, matrix, sink, "append")
 
 
 @register(
@@ -746,17 +709,10 @@ def run_transition_matrix_state(
     The sink holds per-transition rows; the matrix rollup is the
     downstream aggregation (at deploy: a sink table + a batch/continuous
     rollup — or chain a windowed count after the stateful op)."""
-    _stop_query(spark, sink)
     trans = transition_state_stream(spark, path, **source_options)
-    _run_stream(
-        spark,
-        trans.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
+    mem = run_to_memory(spark, trans, sink, "append")
     return (
-        spark.table(sink)
-        .groupBy("day", "prev_type", "next_type")
+        mem.groupBy("day", "prev_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

@@ -43,8 +43,7 @@ from mapreduceimplementation_spark.registry import ORACLES, register
 from mapreduceimplementation_spark.functions.stable import dsum
 from mapreduceimplementation_spark.streaming.windowed import (
     _events_stream,
-    _run_stream,
-    _stop_query,
+    run_to_memory,
 )
 
 # importing the batch plans guarantees B8's oracle is registered before we
@@ -122,7 +121,6 @@ def run_sessionize_stream(
 ) -> DataFrame:
     """Run the stateful sessionize stream over `path` to completion and
     return the reconciled session table (see module docstring)."""
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "ts", "event_id", "value"
     )
@@ -137,15 +135,9 @@ def run_sessionize_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(
-        spark,
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
     # reconciliation: a session re-emitted by a later batch supersedes its
     # provisional row (same key, strictly larger n_events)
-    mem = spark.table(sink)
+    mem = run_to_memory(spark, sessions, sink, "append")
     return mem.groupBy("user_id", "session_id").agg(
         F.max("n_events").alias("n_events"),
         F.min("session_start").alias("session_start"),
@@ -210,7 +202,6 @@ def run_sessionize_native_stream(
 ) -> DataFrame:
     """Run the session_window stream over `path` to completion and return
     the B8-shaped session table (see streaming_sessionize_native)."""
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **source_options).select(
         "user_id", "ts", "value"
     )
@@ -222,13 +213,7 @@ def run_sessionize_native_stream(
             dsum("value").alias("total_value"),
         )
     )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete"),
-    )
-    mem = spark.table(sink)
+    mem = run_to_memory(spark, agg, sink, "complete")
     w = PsWindow.partitionBy("user_id").orderBy("win.start")
     return mem.select(
         "user_id",
@@ -299,7 +284,6 @@ def run_funnel_stream(
     at most 3·|users| rows and the rollup is sink-sized.  Cross-batch:
     a view in batch 1 must gate a click in batch 3 — the multibatch
     pytest pins it."""
-    _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
         .select("user_id", "ts", "event_id", "event_type")
@@ -312,15 +296,9 @@ def run_funnel_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_stream(
-        spark,
-        stages.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
+    mem = run_to_memory(spark, stages, sink, "append")
     counts = (
-        spark.table(sink)
-        .groupBy("stage")
+        mem.groupBy("stage")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
     frame = spark.createDataFrame(
@@ -396,7 +374,6 @@ def run_retention_stream(
     sink holds one row per (user, active day) — the same cardinality
     B24's per-user day-dedup shuffles — and the retention matrix is the
     sink-sized rollup."""
-    _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
         .select("user_id", "ts")
@@ -409,15 +386,9 @@ def run_retention_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_stream(
-        spark,
-        pairs.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append"),
-    )
+    mem = run_to_memory(spark, pairs, sink, "append")
     return (
-        spark.table(sink)
-        .groupBy(
+        mem.groupBy(
             "cohort_day",
             F.datediff("day", "cohort_day").cast("long").alias("day_offset"),
         )
@@ -510,7 +481,6 @@ def run_scd2_stream(
     the winner is unique and deterministic — no emission sequence column
     needed.  Sink size is runs + touched-versions-per-batch, dimension-
     sized, never event-volume-sized."""
-    _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
         .select("user_id", "ts", "event_id", "event_type")
@@ -523,18 +493,12 @@ def run_scd2_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_stream(
-        spark,
-        log.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update"),
-    )
+    mem = run_to_memory(spark, log, sink, "update")
     pick = PsWindow.partitionBy("user_id", "version").orderBy(
         F.col("valid_to").isNull().asc(), F.col("n_events").desc()
     )
     return (
-        spark.table(sink)
-        .withColumn("rn", F.row_number().over(pick))
+        mem.withColumn("rn", F.row_number().over(pick))
         .where(F.col("rn") == 1)
         .select(
             "user_id",
@@ -637,7 +601,6 @@ def run_session_paths_stream(
     n_events — unique by the D22 argument) yields the session table, and
     the report is its bounded rollup mirroring B77's exact frontier
     (n_sessions DESC, path; integer-ppm share)."""
-    _stop_query(spark, sink)
     ev = (
         _events_stream(spark, path, **source_options)
         .select("user_id", "ts", "event_id", "event_type")
@@ -650,18 +613,12 @@ def run_session_paths_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_stream(
-        spark,
-        log.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update"),
-    )
+    mem = run_to_memory(spark, log, sink, "update")
     pick = PsWindow.partitionBy("user_id", "session_seq").orderBy(
         F.col("closed").desc(), F.col("n_events").desc()
     )
     sessions = (
-        spark.table(sink)
-        .withColumn("rn", F.row_number().over(pick))
+        mem.withColumn("rn", F.row_number().over(pick))
         .where(F.col("rn") == 1)
         .select("user_id", "path")
     )

@@ -11,20 +11,25 @@ Streaming aggregation restrictions: count(DISTINCT) is unsupported in
 streaming, so unlike B7 this emits (n_events, total_value) only.  The sum
 uses the same decimal-exact dsum as batch, so results are bit-stable
 across microbatch boundaries and cluster sizes.
+
+Every stream query of the package runs through the two runners here,
+``run_to_memory`` (memory sink) and ``run_upsert`` (foreachBatch upsert
+into a parquet serving table), over the one primitive ``_run_stream``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduceimplementation_spark.functions.stable import dsum, sql_dsum
 from mapreduceimplementation_spark.registry import register
 from mapreduceimplementation_spark.session import scoped_conf
+from mapreduceimplementation_spark.sources.tables import _normalize_events_ts
 
 _SINK = "d1_windowed_counts_sink"
 
@@ -71,7 +76,10 @@ def _run_stream(
     is a per-query semantic property, not a local[32] tuning — on a real
     cluster the skipped batch costs a full state-store scan + commit per
     partition.  Its confs are session-wide while the stream runs, so no
-    other stream may start meanwhile (queries here run one at a time).
+    other stream may start meanwhile: streams run one at a time.  Queries
+    start their streams through ``run_to_memory`` or ``run_upsert``;
+    tests drive custom writers (file sinks with a checkpoint) through
+    this function directly.
 
     Checkpoints (offset/commit/source logs, state-store deltas, schema
     files) are written through the Hadoop FileSystem API, not Spark's
@@ -101,15 +109,111 @@ def _run_stream(
         writer.trigger(availableNow=True).start().awaitTermination()
 
 
+def run_to_memory(
+    spark: SparkSession,
+    df: DataFrame,
+    sink: str,
+    mode: str,
+    *,
+    skip_no_data_batch: bool = False,
+) -> DataFrame:
+    """Run the streaming ``df`` to completion into the memory table
+    ``sink`` in output ``mode`` and return that table.  A still-active
+    query named ``sink`` is stopped first, so a rerun replaces the table.
+    ``skip_no_data_batch`` and the one-stream-at-a-time rule are
+    ``_run_stream``'s."""
+    _stop_query(spark, sink)
+    _run_stream(
+        spark,
+        df.writeStream.format("memory").queryName(sink).outputMode(mode),
+        skip_no_data_batch=skip_no_data_batch,
+    )
+    return spark.table(sink)
+
+
+def _make_upsert(work: str, state: dict, keys: list[str]):
+    """The foreachBatch upsert closure of ``run_upsert``: left-anti +
+    union into an alternating parquet dir keyed on ``keys``, swapped by
+    reference.
+
+    Per-batch cost discipline: ``batch_df`` re-executes its microbatch
+    plan (state-store read included) on EVERY action, and the naive loop
+    takes three (isEmpty, the anti-join probe side, the union write) —
+    persist() caches the microbatch once so the plan runs once, and the
+    empty check reuses the cached partitions.  The serving table is
+    key-bounded (cells/users, not stream length), so caching a batch of
+    changed keys is always executor-memory-safe."""
+
+    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            sp = batch_df.sparkSession
+            new_dir = os.path.join(work, f"state-{batch_id}")
+            if state["dir"] is None:
+                out = batch_df
+            else:
+                # serving-table schema == microbatch schema by construction
+                # (the union below enforces it); passing it explicitly
+                # skips a footer-inference job per microbatch (guide §6)
+                prev = sp.read.schema(batch_df.schema).parquet(state["dir"])
+                kept = prev.join(batch_df.select(*keys), keys, "left_anti")
+                out = kept.unionByName(batch_df)
+            out.write.mode("overwrite").parquet(new_dir)
+            old = state["dir"]
+            state["dir"] = new_dir  # swap by reference — readers see old or new
+            state["batches"] += 1
+            if old is not None:
+                shutil.rmtree(old, ignore_errors=True)
+        finally:
+            batch_df.unpersist()
+
+    return _upsert
+
+
+def run_upsert(
+    spark: SparkSession, df: DataFrame, keys: list[str]
+) -> tuple[DataFrame, int]:
+    """Run the streaming aggregation ``df`` to completion in update mode,
+    upserting each microbatch on ``keys`` into a parquet serving table
+    (``_make_upsert``); returns (serving table, number of microbatches
+    that carried updates).  The one-stream-at-a-time rule is
+    ``_run_stream``'s.  The trailing no-data batch is always skipped:
+    in update mode it only evicts state whose final value was already
+    upserted when it last changed (an empty batch would upsert nothing
+    anyway), and a stream without a watermark never schedules one.
+
+    The table lives in ``upsert-<keys>`` under the application's scratch
+    directory (``SparkFiles.getRootDirectory()``), which Spark deletes
+    when the application ends.  A run first removes what the previous
+    run on the same keys left there, so at most one state dir per stream
+    is on disk — and a DataFrame returned by an earlier run of the same
+    stream is invalid once that stream runs again."""
+    from pyspark import SparkFiles
+
+    work = os.path.join(SparkFiles.getRootDirectory(), "upsert-" + "-".join(keys))
+    shutil.rmtree(work, ignore_errors=True)
+    state = {"dir": None, "batches": 0}
+    _run_stream(
+        spark,
+        df.writeStream.outputMode("update").foreachBatch(
+            _make_upsert(work, state, keys)
+        ),
+        skip_no_data_batch=True,
+    )
+    assert state["dir"] is not None, "stream produced no updates"
+    return spark.read.parquet(state["dir"]), state["batches"]
+
+
 #: per-path schema cache — the probe read lists and foots the file; doing
 #: it once per path instead of per call saves a job on every stream setup
 _SCHEMA_CACHE: dict[str, object] = {}
 
 
 def _events_stream(spark: SparkSession, path: str, **options) -> DataFrame:
-    """events as a file stream with the same nanos→micros ts handling as
-    the batch loader (sources/tables.py load_table); the nanosAsLong conf
-    that surfaces NANOS timestamps as long comes from session.tune."""
+    """events as a file stream, its ts normalized exactly as the batch
+    loader's (sources/tables.py ``_normalize_events_ts``)."""
     if path not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[path] = spark.read.parquet(path).schema  # ts = long nanos
     schema = _SCHEMA_CACHE[path]
@@ -120,15 +224,25 @@ def _events_stream(spark: SparkSession, path: str, **options) -> DataFrame:
     reader = spark.readStream.schema(schema)
     for k, v in options.items():
         reader = reader.option(k, v)
-    raw = reader.parquet(path)
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        # testdata writes TIMESTAMP(NANOS), surfaced as long under the
-        # nanosAsLong conf; plain micro-resolution files need no rewrite
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP; session tz is UTC so this is lossless
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    # watermarks require TIMESTAMP, which the normalization guarantees
+    return _normalize_events_ts(reader.parquet(path))
+
+
+def _minutely_counts(ev: DataFrame) -> DataFrame:
+    """D1's aggregation over an events stream: per 1-minute tumbling
+    window and event_type, the count and the exact value sum, under a
+    1-minute watermark.  D5 and D7 run it over their own feeds."""
+    return (
+        ev.withWatermark("ts", "1 minute")
+        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value").alias("total_value"),
+        )
+        .select(
+            F.col("win.start").alias("minute"), "event_type", "n_events", "total_value"
+        )
+    )
 
 
 @register(
@@ -150,26 +264,8 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals the batch aggregation exactly — the correctness gate
     a streaming re-platform needs before switching traffic.
     """
-    _stop_query(spark, _SINK)
     ev = _events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    agg = (
-        ev.withWatermark("ts", "1 minute")
-        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("minute"), "event_type", "n_events", "total_value"
-        )
-    )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(_SINK)
-        .outputMode("complete"),
-    )
-    return spark.table(_SINK)
+    return run_to_memory(spark, _minutely_counts(ev), _SINK, "complete")
 
 
 _JSON_SINK = "d5_windowed_counts_json_sink"
@@ -207,7 +303,6 @@ def streaming_windowed_counts_json(spark: SparkSession, sf_dir: str) -> DataFram
         materialize_events_jsonl,
     )
 
-    _stop_query(spark, _JSON_SINK)
     d = materialize_events_jsonl(sf_dir)
     ev = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -216,24 +311,7 @@ def streaming_windowed_counts_json(spark: SparkSession, sf_dir: str) -> DataFram
         .option("maxFilesPerTrigger", "3")
         .json(os.path.join(d, "events-*.jsonl"))
     )
-    agg = (
-        ev.withWatermark("ts", "1 minute")
-        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("minute"), "event_type", "n_events", "total_value"
-        )
-    )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(_JSON_SINK)
-        .outputMode("complete"),
-    )
-    return spark.table(_JSON_SINK)
+    return run_to_memory(spark, _minutely_counts(ev), _JSON_SINK, "complete")
 
 
 _TOPK_SINK = "d11_topk_sink"
@@ -269,7 +347,6 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete mode + availableNow ⇒ equals the batch top-k exactly
     (ties broken by event_type: a total order, so the frontier is
     deterministic across engines and partitionings)."""
-    _stop_query(spark, _TOPK_SINK)
     ev = _events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     agg = (
         ev.withWatermark("ts", "1 minute")
@@ -277,20 +354,14 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("win.start").alias("minute"), "event_type", "n_events")
     )
-    _run_stream(
-        spark,
-        agg.writeStream.format("memory")
-        .queryName(_TOPK_SINK)
-        .outputMode("complete"),
-    )
+    counts = run_to_memory(spark, agg, _TOPK_SINK, "complete")
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("minute").orderBy(
         F.col("n_events").desc(), "event_type"
     )
     return (
-        spark.table(_TOPK_SINK)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        counts.withColumn("rnk", F.row_number().over(w).cast("long"))
         .where(F.col("rnk") <= _TOPK_K)
     )
 
@@ -401,7 +472,6 @@ def run_hll_register_stream(
         _SQL_HLL_RHO,
     )
 
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     h = hash64(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
     rho_sql = _SQL_HLL_RHO.format(w=f"(h div {_HLL_M})")
@@ -417,13 +487,7 @@ def run_hll_register_stream(
         .agg(F.max("rho").alias("r"))
         .select(F.col("win.start").alias("day"), "bucket", "r")
     )
-    _run_stream(
-        spark,
-        regs.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, regs, sink, "complete")
 
 
 def hll_finalize(sink: DataFrame, exact: DataFrame) -> DataFrame:
@@ -533,7 +597,6 @@ def run_quantile_cell_stream(
     availableNow replay terminates."""
     from mapreduceimplementation_spark.plans.events import qs_bin
 
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     cells = (
         ev.select("ts", "event_type", qs_bin(F.col("value")).alias("bin"))
@@ -544,13 +607,7 @@ def run_quantile_cell_stream(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("win.start").alias("day"), "event_type", "bin", "cnt")
     )
-    _run_stream(
-        spark,
-        cells.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, cells, sink, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -618,7 +675,6 @@ def run_cms_cell_stream(
         cms_bucket,
     )
 
-    _stop_query(spark, sink)
     ev = _events_stream(spark, path, **options)
     cells = (
         ev.select(
@@ -634,10 +690,4 @@ def run_cms_cell_stream(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("win.start").alias("day"), "d", "bucket", "cnt")
     )
-    _run_stream(
-        spark,
-        cells.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete"),
-    )
-    return spark.table(sink)
+    return run_to_memory(spark, cells, sink, "complete")

@@ -277,6 +277,88 @@ def test_incremental_rollup_upserts_straddled_windows(spark, sf_dir, tmp_path):
     assert len(rows) == 2
 
 
+def test_upsert_stream_leaves_one_state_dir(spark, sf_dir):
+    """A run of an upsert stream removes the serving-table state its
+    previous run left: three runs of D7 leave one state dir on disk, and
+    the last run's table still reads."""
+    from urllib.parse import urlparse
+
+    from mapreduceimplementation_spark.streaming.incremental import (
+        run_incremental_rollup,
+    )
+
+    work_dirs = set()
+    for _ in range(3):
+        out, _ = run_incremental_rollup(spark, sf_dir)
+        # the serving table is <work dir>/state-<batch id>/part-*.parquet
+        for f in out.inputFiles():
+            work_dirs.add(os.path.dirname(os.path.dirname(urlparse(f).path)))
+    state_dirs = [
+        os.path.join(w, e)
+        for w in work_dirs
+        if os.path.isdir(w)
+        for e in os.listdir(w)
+    ]
+    assert len(state_dirs) == 1, state_dirs
+    assert out.count() > 0
+
+
+#: the stream calls each runner of streaming/windowed.py may make
+_RUNNER_CALLS = {
+    "run_to_memory": {"writeStream", "format", "queryName", "_stop_query"},
+    "run_upsert": {"writeStream"},
+}
+
+
+def _stream_starts(path) -> list[str]:
+    """Lines of ``path`` that start or stop a stream by hand: a
+    ``.writeStream``, ``.queryName(``, ``.format("memory")`` or
+    ``_stop_query(`` call outside the streaming/windowed.py runner
+    allowed to make it (``_RUNNER_CALLS``)."""
+    import ast
+
+    in_windowed = path.name == "windowed.py" and path.parent.name == "streaming"
+    hits = []
+    for stmt in ast.parse(path.read_text(), str(path)).body:
+        allowed = set()
+        if in_windowed and isinstance(stmt, ast.FunctionDef):
+            allowed = _RUNNER_CALLS.get(stmt.name, set())
+        for node in ast.walk(stmt):
+            kind = None
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                kind = "writeStream"
+            elif isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                memory = name == "format" and any(
+                    isinstance(a, ast.Constant) and a.value == "memory"
+                    for a in node.args
+                )
+                if name in ("queryName", "_stop_query") or memory:
+                    kind = name
+            if kind is not None and kind not in allowed:
+                hits.append(node.lineno)
+    return [f"{path.parent.name}/{path.name}:{n}" for n in sorted(set(hits))]
+
+
+def test_streams_start_only_in_the_runners():
+    """Every query stream goes through windowed.run_to_memory or
+    windowed.run_upsert: no other function builds a writeStream or
+    stops a query, and nothing under streaming/ makes a temp dir that
+    outlives its run."""
+    from pathlib import Path
+
+    pkg = Path(eng.__file__).resolve().parent
+    modules = sorted(pkg.rglob("*.py"))
+    assert pkg / "streaming" / "windowed.py" in modules
+    hits = [h for p in modules for h in _stream_starts(p)]
+    assert not hits, f"streams started outside the runners: {hits}"
+    mkdtemp = [
+        p.name for p in (pkg / "streaming").glob("*.py") if "mkdtemp" in p.read_text()
+    ]
+    assert not mkdtemp, f"tempfile.mkdtemp under streaming/: {mkdtemp}"
+
+
 def test_enriched_stream_multibatch_equals_batch(spark, sf_dir, tmp_path):
     """D8: the stream-static join must enrich events arriving in ANY
     microbatch (the static side is re-resolved per batch, the stream is
